@@ -20,8 +20,9 @@ from pyspark.sql import functions as F
 
 from ..functions.trino import trino_round
 from ..sources.testdata import load_table, load_table_parallel
-from . import register
+from . import register, session_artifact
 from .core import DAVG, DSUM, davg, dsum
+from .mining import _trade_edges
 
 EVENT_TYPES = ("click", "error", "purchase", "signup", "view")
 
@@ -866,12 +867,6 @@ def _pagerank_oracle(iters: int = 3, damping: str = "0.85") -> str:
     return sql
 
 
-
-def _pagerank_prepare(spark: SparkSession, sf_dir: str):
-    from .mining import _trade_edges
-
-    return _trade_edges(spark, sf_dir)
-
 @register(
     "graph_pagerank",
     _pagerank_oracle(3),
@@ -882,11 +877,10 @@ def _pagerank_prepare(spark: SparkSession, sf_dir: str):
     "aggregates broadcast via crossJoin, nothing collected. Per-edge "
     "terms in IEEE double + decimal-fenced sums make the fixpoint "
     "bit-identical to the unrolled-CTE oracle.",
-    prepare=_pagerank_prepare,
+    prepare=_trade_edges,
 )
 def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graph import pagerank
-    from .mining import _trade_edges
 
     # shared session-cached edge table (mining._trade_edges): the same
     # materialize-once artifact pagerank/triangles/degrees/LPA all read
@@ -1048,45 +1042,37 @@ def _er_supplier_base(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ER_PAIRS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def _er_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Nation-blocked fuzzy pair table for entity resolution; cached +
-    localCheckpointed per (session, sf_dir) like dedup_clusters'
+    """Nation-blocked fuzzy pair table for entity resolution; a
+    localCheckpointed ``session_artifact`` like dedup_clusters'
     _cluster_pairs — in production the match-pair table is materialized
     once and the clustering/golden-record step runs from it."""
-    # applicationId is stable per context and never recycled the way a
-    # garbage-collected context's id() can be (ADVICE r8).
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _ER_PAIRS_CACHE:
-        from ..operators.fuzzy import fuzzy_self_join
+    return session_artifact(spark, sf_dir, "er_pairs", _build_er_pairs)
 
-        s = _er_supplier_base(spark, sf_dir)
-        raw_pairs = fuzzy_self_join(
-            s.select("s_suppkey", "digits"),
-            key="s_suppkey",
-            text="digits",
-            max_dist=1,
+
+def _build_er_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..operators.fuzzy import fuzzy_self_join
+
+    s = _er_supplier_base(spark, sf_dir)
+    raw_pairs = fuzzy_self_join(
+        s.select("s_suppkey", "digits"),
+        key="s_suppkey",
+        text="digits",
+        max_dist=1,
+    )
+    nk = s.select("s_suppkey", "nk")
+    return (
+        raw_pairs.join(
+            nk.select(F.col("s_suppkey").alias("key_a"), F.col("nk").alias("_nka")),
+            "key_a",
         )
-        nk = s.select("s_suppkey", "nk")
-        pairs = (
-            raw_pairs.join(
-                nk.select(
-                    F.col("s_suppkey").alias("key_a"), F.col("nk").alias("_nka")
-                ),
-                "key_a",
-            )
-            .join(
-                nk.select(
-                    F.col("s_suppkey").alias("key_b"), F.col("nk").alias("_nkb")
-                ),
-                "key_b",
-            )
-            .filter(F.col("_nka") == F.col("_nkb"))
+        .join(
+            nk.select(F.col("s_suppkey").alias("key_b"), F.col("nk").alias("_nkb")),
+            "key_b",
         )
-        _ER_PAIRS_CACHE[key] = pairs.localCheckpoint()
-    return _ER_PAIRS_CACHE[key]
+        .filter(F.col("_nka") == F.col("_nkb"))
+        .localCheckpoint()
+    )
 
 
 

@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 from ..functions.trino import trino_round
 from ..operators import dedup, multimodal, similarity, text
 from ..sources.testdata import load_table, load_table_parallel
-from . import register
+from . import register, session_artifact
 
 MD5L = "('0x' || substr(md5({x}), 1, 15))::BIGINT"
 TOKS = "string_split_regex(trim(text), '\\s+')"
@@ -96,9 +96,6 @@ def dedup_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.minhash_signatures(load_table_parallel(spark, sf_dir, "documents"))
 
 
-_BAND_INDEX_CACHE: dict[tuple[str, str], "DataFrame"] = {}
-
-
 def shared_band_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-cached full-corpus banded MinHash index (doc_id, band,
     band_digest, sig0..7) — the ONE persisted dedup artifact the
@@ -111,32 +108,18 @@ def shared_band_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     functions, so banding the full corpus then filtering equals signing
     a filtered corpus.
 
-    The cache holds AT MOST ONE entry (VERDICT r12 #7): switching to a
-    new (session, sf_dir) evicts the previous index — its checkpoint
-    blocks are released eagerly — so a long-lived session sweeping many
-    sf_dirs never accumulates checkpoint storage. The bench/driver run
-    one sf_dir per process, so eviction never fires there."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _BAND_INDEX_CACHE:
-        for old_key in list(_BAND_INDEX_CACHE):
-            old = _BAND_INDEX_CACHE.pop(old_key)
-            try:
-                # free the localCheckpoint's storage now instead of
-                # waiting for the ContextCleaner to notice the dropped
-                # reference
-                old.rdd.unpersist()
-                old.unpersist()
-            except Exception:
-                pass  # session already stopped; nothing to free
-        _BAND_INDEX_CACHE[key] = dedup.band_table(
-            dedup.minhash_signatures(
-                load_table_parallel(spark, sf_dir, "documents")
-            ),
-            "doc_id",
-            8,
-            4,
-        ).localCheckpoint()
-    return _BAND_INDEX_CACHE[key]
+    Cached by ``session_artifact`` (one live entry, evicted and released
+    when the session, sf_dir or its files change)."""
+    return session_artifact(spark, sf_dir, "band_index", _build_band_index)
+
+
+def _build_band_index(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return dedup.band_table(
+        dedup.minhash_signatures(load_table_parallel(spark, sf_dir, "documents")),
+        "doc_id",
+        8,
+        4,
+    ).localCheckpoint()
 
 
 _BANDS_SQL = """
@@ -754,42 +737,22 @@ def sampling_priority_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     return priority_sample_estimate(docs, "doc_id", "n_chars", 50, salt="psamp")
 
 
-#: Near-dup pair tables, keyed by (session, sf_dir): in a deduplication
-#: pipeline the pairwise stage's output is the *input artifact* of the
-#: clustering stage — bench times the clustering, not a recompute of the
-#: pairs (fn still fills the cache itself when cold).
-_PAIRS_CACHE: dict[tuple[str, str], DataFrame] = {}
+def _jaccard_pairs(block_col: str):
+    def build(spark: SparkSession, sf_dir: str) -> DataFrame:
+        return dedup.ngram_jaccard_pairs(
+            load_table_parallel(spark, sf_dir, "documents"),
+            block_col=block_col,
+            max_gram_df=100,
+        ).localCheckpoint()
 
-
-def _evict_pairs_other_sf(spark: SparkSession, sf_dir: str) -> None:
-    """Keep pair tables only for the CURRENT (session, sf_dir) — same
-    storage-hygiene rule as shared_band_index (VERDICT r12 #7): a
-    long-lived session sweeping sf_dirs releases the previous dir's
-    checkpoint blocks instead of accumulating them. Both blocking
-    variants (source / lang) of the current dir stay cached."""
-    app = spark.sparkContext.applicationId
-    for old_key in [
-        k for k in _PAIRS_CACHE if k[0] != app or k[1] != sf_dir
-    ]:
-        old = _PAIRS_CACHE.pop(old_key)
-        try:
-            old.rdd.unpersist()
-            old.unpersist()
-        except Exception:
-            pass  # session already stopped; nothing to free
+    return build
 
 
 def _cluster_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # applicationId, not id(ctx): CPython can recycle a dead context's id
-    # and hand back a checkpoint bound to the dead context (ADVICE r8).
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _PAIRS_CACHE:
-        _evict_pairs_other_sf(spark, sf_dir)
-        pairs = dedup.ngram_jaccard_pairs(
-            load_table_parallel(spark, sf_dir, "documents"), block_col="source", max_gram_df=100
-        )
-        _PAIRS_CACHE[key] = pairs.localCheckpoint()
-    return _PAIRS_CACHE[key]
+    """Source-blocked near-dup pair table: in a deduplication pipeline the
+    pairwise stage's output is the *input artifact* of the clustering
+    stage — bench times the clustering, not a recompute of the pairs."""
+    return session_artifact(spark, sf_dir, "cluster_pairs", _jaccard_pairs("source"))
 
 
 def _containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -797,18 +760,11 @@ def _containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     matrix: same inverted-index ngram-Jaccard join as ``_cluster_pairs``
     but blocked on ``lang`` so components CAN span sources (a
     source-blocked graph would make every containment 0 by
-    construction). Cached per (session, sf_dir) like the source-blocked
-    table."""
-    key = (spark.sparkContext.applicationId, sf_dir, "lang")
-    if key not in _PAIRS_CACHE:
-        _evict_pairs_other_sf(spark, sf_dir)
-        pairs = dedup.ngram_jaccard_pairs(
-            load_table_parallel(spark, sf_dir, "documents"),
-            block_col="lang",
-            max_gram_df=100,
-        )
-        _PAIRS_CACHE[key] = pairs.localCheckpoint()
-    return _PAIRS_CACHE[key]
+    construction). A separate artifact name, so both tables of one
+    sf_dir stay cached together."""
+    return session_artifact(
+        spark, sf_dir, "containment_pairs", _jaccard_pairs("lang")
+    )
 
 
 @register(
@@ -920,7 +876,7 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     "thing this measures); near-dups across crawls share a language, "
     "so the lang block keeps the posting-list join linear while "
     "letting clusters cross sources.",
-    prepare=lambda spark, sf_dir: _containment_pairs(spark, sf_dir),
+    prepare=_containment_pairs,
 )
 def dedup_cluster_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "source")
@@ -1186,18 +1142,16 @@ def text_corpus_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 
-#: Built IVF indexes, keyed by (session, sf_dir): the build is the offline
-#: half (write-once at scale); queries/bench time the probe.
-_IVF_CACHE: dict[tuple[str, str], similarity.IvfIndex] = {}
-
-
 def _ivf_index(spark: SparkSession, sf_dir: str) -> similarity.IvfIndex:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _IVF_CACHE:
-        _IVF_CACHE[key] = similarity.build_ivf_index(
-            load_table_parallel(spark, sf_dir, "embeddings"), n_cells=16, method="hash"
-        )
-    return _IVF_CACHE[key]
+    """The built IVF index: the build is the offline half (write-once at
+    scale); queries/bench time the probe."""
+    return session_artifact(spark, sf_dir, "ivf_index", _build_ivf_index)
+
+
+def _build_ivf_index(spark: SparkSession, sf_dir: str) -> similarity.IvfIndex:
+    return similarity.build_ivf_index(
+        load_table_parallel(spark, sf_dir, "embeddings"), n_cells=16, method="hash"
+    )
 
 
 _IVF_DOT = "list_sum(list_transform(generate_series(1, len({a})), i -> {a}[i] * {b}[i]))"

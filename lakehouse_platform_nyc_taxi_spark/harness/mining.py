@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 
 from ..functions.trino import trino_round
 from ..sources.testdata import load_table
-from . import register
+from . import register, session_artifact
 from .core import DSUM
 
 # Shared nation-trade edge derivation (identical to graph_pagerank's):
@@ -32,32 +32,16 @@ _EDGES_SQL = """
 """
 
 
-#: Nation-trade edge table, keyed by (session, sf_dir): the 4-table
-#: join's output is the shared input artifact of every graph query
-#: (pagerank / triangles / degrees / label propagation) — in production
-#: the edge table is materialized once and the algorithms run from it,
-#: so the cache localCheckpoints it per session (~|nations|^2 rows).
-_EDGES_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def _trade_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _EDGES_CACHE:
-        # at most ONE cached edge table (storage hygiene, same rule as
-        # shared_band_index / _PAIRS_CACHE): sweeping sf_dirs in one
-        # session frees the previous checkpoint instead of accumulating
-        for old_key in [k for k in _EDGES_CACHE if k != key]:
-            old = _EDGES_CACHE.pop(old_key)
-            try:
-                old.rdd.unpersist()
-                old.unpersist()
-            except Exception:
-                pass  # session already stopped; nothing to free
-        _EDGES_CACHE[key] = _trade_edges_build(spark, sf_dir).localCheckpoint()
-    return _EDGES_CACHE[key]
+    """Nation-trade edge table: the 4-table join's output is the shared
+    input artifact of every graph query (pagerank / hits / triangles /
+    degrees / label propagation) — in production the edge table is
+    materialized once and the algorithms run from it, so it is a
+    localCheckpointed ``session_artifact`` (~|nations|^2 rows)."""
+    return session_artifact(spark, sf_dir, "trade_edges", _build_trade_edges)
 
 
-def _trade_edges_build(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _build_trade_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     l = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
@@ -70,6 +54,7 @@ def _trade_edges_build(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("s_nationkey").alias("src"), F.col("c_nationkey").alias("dst")
         )
         .agg(F.count(F.lit(1)).cast("double").alias("w"))
+        .localCheckpoint()
     )
 
 
@@ -878,10 +863,6 @@ def _hits_oracle(iters: int = 3) -> str:
     return sql
 
 
-def _hits_prepare(spark: SparkSession, sf_dir: str):
-    return _trade_edges(spark, sf_dir)
-
-
 @register(
     "graph_hits",
     _hits_oracle(3),
@@ -894,7 +875,7 @@ def _hits_prepare(spark: SparkSession, sf_dir: str):
     "via crossJoin, decimal-fenced sums make the fixpoint "
     "bit-identical to the unrolled-CTE oracle "
     "(operators/graph.py::hits).",
-    prepare=_hits_prepare,
+    prepare=_trade_edges,
 )
 def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graph import hits

@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from .. import streaming as S
-from . import register
+from . import register, session_artifact
 
 _WM = "max(ts) - INTERVAL 1 HOUR"
 
@@ -365,27 +365,18 @@ def _gate_agree_sql() -> str:
     )
 
 
-_GATE_INDEX_CACHE: dict = {}
-
-
 def _gate_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-cached banded signature index of the even-id (stored)
-    corpus half — the persisted artifact the gate joins against; in
-    production this is the band table the batch dedup already writes."""
+    """Banded signature index of the even-id (stored) corpus half — the
+    persisted artifact the gate joins against; in production this is the
+    band table the batch dedup already writes. An even-id filter of the
+    session-shared full-corpus band index (signatures are per-doc pure
+    functions, so filter-after-band equals band-after-filter); the
+    filter of a checkpointed frame is cheap, so it is not cached."""
     from pyspark.sql import functions as F
 
     from .llm import shared_band_index
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _GATE_INDEX_CACHE:
-        # even-id filter of the session-shared full-corpus band index
-        # (signatures are per-doc pure functions, so filter-after-band
-        # equals band-after-filter); the filter of a checkpointed frame
-        # is cheap enough that no second checkpoint is needed
-        _GATE_INDEX_CACHE[key] = shared_band_index(spark, sf_dir).filter(
-            F.col("doc_id") % 2 == 0
-        )
-    return _GATE_INDEX_CACHE[key]
+    return shared_band_index(spark, sf_dir).filter(F.col("doc_id") % 2 == 0)
 
 
 def _streaming_dedup_gate_oracle() -> str:
@@ -511,53 +502,42 @@ def streaming_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_EVAL_GRAMS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def _eval_gram_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct 8-gram table of the held-out eval docs (doc_id % 20 ==
     7 — same convention as dedup_decontamination): the persisted
-    artifact a production gate would load. Cached per (session,
-    sf_dir), one entry per process like the band index; gram
-    construction is the exact expression the batch audit compiles."""
+    artifact a production gate would load, cached by
+    ``session_artifact``; gram construction is the exact expression the
+    batch audit compiles."""
+    return session_artifact(spark, sf_dir, "eval_grams", _build_eval_gram_index)
+
+
+def _build_eval_gram_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     from ..operators.text import tokens
     from ..sources.testdata import load_table
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _EVAL_GRAMS_CACHE:
-        for old_key in list(_EVAL_GRAMS_CACHE):
-            old = _EVAL_GRAMS_CACHE.pop(old_key)
-            try:
-                old.rdd.unpersist()
-                old.unpersist()
-            except Exception:
-                pass  # session already stopped; nothing to free
-        n = 8
-        toks = F.col("_toks")
-        grams = F.when(
-            F.size(toks) >= n,
-            F.array_distinct(
-                F.transform(
-                    F.sequence(F.lit(0), F.size(toks) - n),
-                    lambda i: F.concat_ws(
-                        " ", *[F.element_at(toks, i + j + 1) for j in range(n)]
-                    ),
-                )
-            ),
-        ).otherwise(F.array().cast("array<string>"))
-        docs = load_table(spark, sf_dir, "documents").filter(
-            F.col("doc_id") % 20 == 7
-        )
-        _EVAL_GRAMS_CACHE[key] = (
-            docs.select(tokens("text").alias("_toks"))
-            .select(grams.alias("grams"))
-            .select(F.explode("grams").alias("gram"))
-            .distinct()
-            .localCheckpoint()
-        )
-    return _EVAL_GRAMS_CACHE[key]
+    n = 8
+    toks = F.col("_toks")
+    grams = F.when(
+        F.size(toks) >= n,
+        F.array_distinct(
+            F.transform(
+                F.sequence(F.lit(0), F.size(toks) - n),
+                lambda i: F.concat_ws(
+                    " ", *[F.element_at(toks, i + j + 1) for j in range(n)]
+                ),
+            )
+        ),
+    ).otherwise(F.array().cast("array<string>"))
+    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") % 20 == 7)
+    return (
+        docs.select(tokens("text").alias("_toks"))
+        .select(grams.alias("grams"))
+        .select(F.explode("grams").alias("gram"))
+        .distinct()
+        .localCheckpoint()
+    )
 
 
 def _grams8_sql_stream() -> str:
@@ -610,39 +590,32 @@ def streaming_decontamination_gate(spark: SparkSession, sf_dir: str) -> DataFram
     return S.run_available_now(out, "append", state_partitions=2)
 
 
-_CONF_THR_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def _conformal_threshold_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-group conformal threshold artifact (event_type, _pred, _thr):
     the public ``operators.stats.conformal_threshold_artifact`` (same
     md5 split / rank election as the batch stats_conformal_coverage
-    query) over events, session-cached + localCheckpoint (one entry,
-    evicted on session change — the eval-gram index pattern)."""
+    query) over events, localCheckpointed and cached by
+    ``session_artifact``."""
+    return session_artifact(
+        spark, sf_dir, "conformal_thresholds", _build_conformal_threshold_index
+    )
+
+
+def _build_conformal_threshold_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.stats import conformal_threshold_artifact
     from ..sources.testdata import load_table
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _CONF_THR_CACHE:
-        for old_key in list(_CONF_THR_CACHE):
-            old = _CONF_THR_CACHE.pop(old_key)
-            try:
-                old.rdd.unpersist()
-                old.unpersist()
-            except Exception:
-                pass  # session already stopped; nothing to free
-        _CONF_THR_CACHE[key] = (
-            conformal_threshold_artifact(
-                load_table(spark, sf_dir, "events"),
-                "event_type",
-                "event_id",
-                "value",
-                alpha=0.1,
-            )
-            .select("event_type", "_pred", "_thr")
-            .localCheckpoint()
+    return (
+        conformal_threshold_artifact(
+            load_table(spark, sf_dir, "events"),
+            "event_type",
+            "event_id",
+            "value",
+            alpha=0.1,
         )
-    return _CONF_THR_CACHE[key]
+        .select("event_type", "_pred", "_thr")
+        .localCheckpoint()
+    )
 
 
 _CONF_HASH_STREAM = "('0x' || substr(md5(CAST(event_id AS VARCHAR) || '|conf'), 1, 15))::BIGINT"
@@ -761,9 +734,6 @@ def streaming_attributed_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Round-16: streaming perceptual-hash image dedup gate
 # ---------------------------------------------------------------------------
 
-_PHASH_GATE_CACHE: dict = {}
-
-
 def _phash_payload(df: DataFrame) -> DataFrame:
     """The document->binary-P5-image projection shared by the stored
     index and the stream side (identical to multimodal_phash_neardup's
@@ -786,20 +756,17 @@ def _phash_gate_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-cached perceptual-hash band index of the even-id (stored)
     image corpus — 4 ints + an id per image, the persisted artifact
     batch image dedup already writes."""
+    return session_artifact(spark, sf_dir, "phash_gate", _build_phash_gate_index)
+
+
+def _build_phash_gate_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     from ..operators.multimodal import phash_bands
     from ..sources.testdata import load_table
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _PHASH_GATE_CACHE:
-        stored = load_table(spark, sf_dir, "documents").filter(
-            F.col("doc_id") % 2 == 0
-        )
-        _PHASH_GATE_CACHE[key] = phash_bands(
-            _phash_payload(stored)
-        ).localCheckpoint()
-    return _PHASH_GATE_CACHE[key]
+    stored = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") % 2 == 0)
+    return phash_bands(_phash_payload(stored)).localCheckpoint()
 
 
 def _banded_gate_oracle(bands_cte: str, max_hamming: int = 3) -> str:
@@ -872,30 +839,28 @@ def streaming_phash_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the name to harness/__init__._PRIORITY's tail (1-in-1-out).
 # --------------------------------------------------------------------------
 
-_AUDIO_GATE_CACHE: dict = {}
-
-
 def _audio_gate_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-cached energy-band index of the even-id (stored) audio
     corpus — 4 ints + an id per clip, the persisted artifact batch
     audio dedup (dedup_audio_neardup) already derives."""
+    return session_artifact(spark, sf_dir, "audio_gate", _build_audio_gate_index)
+
+
+def _build_audio_gate_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     from ..operators.multimodal import audio_energy_bands
     from ..sources.testdata import load_table
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _AUDIO_GATE_CACHE:
-        stored = load_table(spark, sf_dir, "documents").filter(
-            (F.col("doc_id") % 2 == 0) & (F.length("text") > 0)
+    stored = load_table(spark, sf_dir, "documents").filter(
+        (F.col("doc_id") % 2 == 0) & (F.length("text") > 0)
+    )
+    return audio_energy_bands(
+        stored.select(
+            F.col("doc_id").alias("asset_id"),
+            F.encode(F.col("text"), "UTF-8").alias("content"),
         )
-        _AUDIO_GATE_CACHE[key] = audio_energy_bands(
-            stored.select(
-                F.col("doc_id").alias("asset_id"),
-                F.encode(F.col("text"), "UTF-8").alias("content"),
-            )
-        ).localCheckpoint()
-    return _AUDIO_GATE_CACHE[key]
+    ).localCheckpoint()
 
 
 def _audio_gate_oracle(max_hamming: int = 3) -> str:

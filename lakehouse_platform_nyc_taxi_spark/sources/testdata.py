@@ -68,14 +68,9 @@ def load_table_parallel(
     a few MB here, measured 5-6x end-to-end on the fingerprint/MinHash
     family. Scan-bound or pushdown-sensitive queries should keep plain
     ``load_table`` (the extra exchange would only add cost)."""
-    df = load_table(spark, sf_dir, name)
-    # Measurement hook (r18/r19 optimization rounds): interleaved A/B
-    # scripts toggle the repartition between reps in ONE session — the
-    # only timing protocol the bursty-neighbor host supports. Not a
-    # tuning knob; unset in production and in the bench.
-    if os.environ.get("SPARK_GRAFT_RR_OFF") == "1":
-        return df
-    return df.repartition(partitions or spark.sparkContext.defaultParallelism)
+    return load_table(spark, sf_dir, name).repartition(
+        partitions or spark.sparkContext.defaultParallelism
+    )
 
 
 def load_tables(

@@ -2102,24 +2102,6 @@ def test_funnel_latency_user_counts_match_funnel_counts(spark):
         assert lat[s] == counts[s], (s, lat[s], counts[s])
 
 
-def test_shared_band_index_cache_caps_at_one_entry(spark):
-    """VERDICT r12 #7: the session-level MinHash band-index cache must
-    hold at most one (session, sf_dir) entry — sweeping sf_dirs in one
-    long-lived session evicts (and unpersists) the previous index
-    instead of accumulating checkpoint storage."""
-    from lakehouse_platform_nyc_taxi_spark.harness import llm
-
-    llm._BAND_INDEX_CACHE.clear()
-    a = llm.shared_band_index(spark, "/root/testdata/sf0.001")
-    assert len(llm._BAND_INDEX_CACHE) == 1
-    assert llm.shared_band_index(spark, "/root/testdata/sf0.001") is a
-    b = llm.shared_band_index(spark, "/root/testdata/sf0.01")
-    assert len(llm._BAND_INDEX_CACHE) == 1
-    assert b is not a
-    assert b.count() > 0  # evicting the old entry left the new one usable
-    llm._BAND_INDEX_CACHE.clear()
-
-
 def test_decontamination_flags_shared_8gram_only(spark):
     """A train doc sharing an 8-gram with an eval doc is contaminated;
     a disjoint train doc is not; short docs (<8 tokens) contribute no
@@ -2214,37 +2196,6 @@ def test_mmr_rerank_lambda_one_is_pure_relevance(spark):
     q = spark.createDataFrame([([1.0, 0.0],)], "qv array<double>")
     got = mmr_rerank(df, q, k=3, pool=4, lam=1.0).collect()
     assert [r.vec_id for r in got] == [1, 2, 3]
-
-
-def test_pairs_cache_evicts_other_sf_dirs(spark):
-    """_PAIRS_CACHE keeps only the current sf_dir's pair tables (both
-    blocking variants may coexist); entries for other dirs unpersist
-    on the next build — same hygiene rule as the band index."""
-    from lakehouse_platform_nyc_taxi_spark.harness import llm
-
-    llm._PAIRS_CACHE.clear()
-    llm._cluster_pairs(spark, "/root/testdata/sf0.001")
-    app = spark.sparkContext.applicationId
-    assert set(llm._PAIRS_CACHE) == {(app, "/root/testdata/sf0.001")}
-    # same dir, lang variant: coexists
-    llm._containment_pairs(spark, "/root/testdata/sf0.001")
-    assert len(llm._PAIRS_CACHE) == 2
-    # different dir: both prior entries evicted
-    llm._cluster_pairs(spark, "/root/testdata/sf0.01")
-    assert set(llm._PAIRS_CACHE) == {(app, "/root/testdata/sf0.01")}
-    llm._PAIRS_CACHE.clear()
-
-
-def test_trade_edges_cache_caps_at_one_entry(spark):
-    from lakehouse_platform_nyc_taxi_spark.harness import mining
-
-    mining._EDGES_CACHE.clear()
-    mining._trade_edges(spark, "/root/testdata/sf0.001")
-    assert len(mining._EDGES_CACHE) == 1
-    mining._trade_edges(spark, "/root/testdata/sf0.01")
-    assert len(mining._EDGES_CACHE) == 1
-    assert list(mining._EDGES_CACHE)[0][1] == "/root/testdata/sf0.01"
-    mining._EDGES_CACHE.clear()
 
 
 def test_ece_reliability_hand_computed(spark):
