@@ -8,7 +8,7 @@ fuses into the downstream mart scans).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.trino import (
@@ -142,13 +142,18 @@ def int_trips_enriched(unified: DataFrame) -> DataFrame:
     )
 
 
-def int_trips_cleaned(enriched: DataFrame) -> DataFrame:
-    """int_trips_cleaned.sql:17-19 — the AND/OR precedence quirk is part
-    of the contract: ``(is_high_quality AND speed < 80) OR speed IS NULL``,
+def cleaned_predicate() -> Column:
+    """The int_trips_cleaned row filter (int_trips_cleaned.sql:17-19) over
+    int_trips_enriched's columns. The AND/OR precedence quirk is part of
+    the contract: ``(is_high_quality AND speed < 80) OR speed IS NULL``,
     so NULL-speed rows pass regardless of the quality flag. Reproduced,
-    not fixed.
+    not fixed. Shared by the model and the quality suite's fused scan.
     """
     speed = F.col("avg_speed_mph")
-    return enriched.filter(
-        ((F.col("is_high_quality_trip") == True) & (speed < 80)) | speed.isNull()  # noqa: E712
-    )
+    return ((F.col("is_high_quality_trip") == True) & (speed < 80)) | speed.isNull()  # noqa: E712
+
+
+def int_trips_cleaned(enriched: DataFrame) -> DataFrame:
+    """int_trips_cleaned.sql: the enriched rows that pass
+    :func:`cleaned_predicate`."""
+    return enriched.filter(cleaned_predicate())

@@ -132,21 +132,19 @@ STAGING_MODELS = {
 def incremental_watermark_filter(raw: DataFrame, target: DataFrame | None) -> DataFrame:
     """P4: the is_incremental() predicate (stg_nyc_taxi__yellow_trips.sql:13-17).
 
-    Reprocess the target's max (year, month) and anything later. The two
-    scalar watermarks are collected driver-side (two tiny aggregates) —
-    the same shape as Trino's scalar subqueries; the resulting literal
-    predicate partition-prunes the raw scan.
+    Reprocess the target's max (year, month) and anything later. The
+    watermark is collected driver-side in ONE tiny aggregate —
+    ``max(struct(year, month))`` orders by year, then month, with NULL
+    fields lowest, so it equals Trino's two scalar subqueries (max year,
+    then max month within it); the resulting literal predicate
+    partition-prunes the raw scan.
     """
     if target is None:
         return raw
-    mx = target.agg(F.max("year").alias("y")).first()
-    if mx is None or mx.y is None:
+    mx = target.agg(F.max(F.struct("year", "month")).alias("w")).first().w
+    if mx is None or mx.year is None:
         return raw
-    max_year = mx.y
-    max_month = (
-        target.filter(F.col("year") == max_year).agg(F.max("month").alias("m")).first().m
-    )
     return raw.filter(
-        (F.col("year") > max_year)
-        | ((F.col("year") == max_year) & (F.col("month") >= max_month))
+        (F.col("year") > mx.year)
+        | ((F.col("year") == mx.year) & (F.col("month") >= mx.month))
     )

@@ -1,11 +1,15 @@
 """Data-quality assertion runner — the dbt-test DSL re-expressed (SURVEY.md §2.11).
 
 A test is a query returning violating rows; pass <=> 0 rows (dbt's
-contract). Each generic test compiles to a single filter+count over the
-model DataFrame — one Catalyst job, pushdown-friendly, no driver
-materialization beyond the count. ``run_assertions`` batches every
-assertion on the same model into ONE aggregate pass (sum-of-case per
-test), so a 37-test suite costs a handful of scans rather than 37.
+contract). Each generic test compiles to a boolean violation column
+counted as ``sum(CASE WHEN violation THEN 1 ELSE 0 END)`` — pushdown-
+friendly, no driver materialization beyond the count. ``run_assertions``
+batches every assertion read from the same SCAN into ONE aggregate pass,
+so a 37-test suite costs a handful of scans rather than 37. The scan is
+the asserted model itself unless the assertion names another model in
+``scan``: checks on a chain of views (unified -> enriched -> cleaned)
+then share one pass over the last view that still holds every row,
+instead of rebuilding the chain once per model.
 """
 
 from __future__ import annotations
@@ -23,6 +27,11 @@ class Assertion:
     model: str
     violation: Column  # boolean column: true == row violates
     severity: str = "error"  # error | warn
+    #: model whose aggregate pass evaluates this check in place of
+    #: ``model``. Contract: its rows are a superset of ``model``'s rows,
+    #: with the same values in every column ``violation`` reads, and
+    #: ``violation`` is false or NULL on the extra rows.
+    scan: str | None = None
 
 
 @dataclass
@@ -72,24 +81,38 @@ def expression_is_true(model: str, name: str, violation: Column) -> Assertion:
 def run_assertions(
     models: dict[str, DataFrame], assertions: Sequence[Assertion]
 ) -> list[AssertionResult]:
-    """Evaluate all assertions, one aggregate job per distinct model."""
-    by_model: dict[str, list[Assertion]] = {}
-    for a in assertions:
-        by_model.setdefault(a.model, []).append(a)
+    """Evaluate all assertions, one aggregate job per distinct scan.
 
-    results: list[AssertionResult] = []
-    for model_name, group in by_model.items():
-        df = models[model_name]
+    An assertion is counted over ``models[a.scan]`` when it names a scan
+    present in ``models`` (see :class:`Assertion` for the contract the
+    scan must meet), otherwise over ``models[a.model]`` — so a caller
+    passing only some models still gets every check it can resolve.
+    Results are grouped by ``model`` in first-appearance order, each
+    group in input order, whichever scan counted them.
+    """
+    by_scan: dict[str, list[tuple[int, Assertion]]] = {}
+    for i, a in enumerate(assertions):
+        scan = a.scan if a.scan in models else a.model
+        by_scan.setdefault(scan, []).append((i, a))
+
+    failures: dict[int, int] = {}
+    for scan, group in by_scan.items():
         aggs = [
             F.sum(F.when(a.violation, 1).otherwise(0)).cast("long").alias(str(i))
-            for i, a in enumerate(group)
+            for i, a in group
         ]
-        row = df.agg(*aggs).first()
-        for i, a in enumerate(group):
-            results.append(
-                AssertionResult(a.name, a.model, int(row[str(i)] or 0), a.severity)
-            )
-    return results
+        row = models[scan].agg(*aggs).first()
+        for i, _ in group:
+            failures[i] = int(row[str(i)] or 0)
+
+    model_order: dict[str, int] = {}
+    for a in assertions:
+        model_order.setdefault(a.model, len(model_order))
+    results = [
+        AssertionResult(a.name, a.model, failures[i], a.severity)
+        for i, a in enumerate(assertions)
+    ]
+    return sorted(results, key=lambda r: model_order[r.model])
 
 
 def positive_fare_threshold(fct: DataFrame, tolerance: float = 0.05) -> AssertionResult:

@@ -8,6 +8,7 @@ declarations total 35 across layers; the two singular tests bring it to 37.
 
 from __future__ import annotations
 
+from ..models.intermediate import cleaned_predicate
 from .assertions import Assertion, accepted_range, accepted_values, not_null
 
 
@@ -33,21 +34,29 @@ def taxi_assertion_suite() -> list[Assertion]:
     a.append(accepted_range(stg, "total_amount", min_value=0))
 
     # --- intermediate (dbt/models/intermediate/schema.yml:4-45): 9 tests ---
-    a.append(not_null("int_trips_unified", "trip_id"))
-    a.append(not_null("int_trips_unified", "taxi_type"))
-    a.append(
-        accepted_values("int_trips_unified", "taxi_type", ["yellow", "green", "fhv", "fhvhv"])
-    )
-    a.append(not_null("int_trips_unified", "pickup_datetime"))
-    a.append(not_null("int_trips_enriched", "trip_id"))
-    a.append(not_null("int_trips_enriched", "is_high_quality_trip"))
-    a.append(
+    # The three intermediate models are unmaterialized views over one
+    # chain, so all 9 checks share ONE pass over int_trips_enriched
+    # instead of rebuilding the staging union once per model:
+    # enriched only adds columns to unified (same rows, same values),
+    # and cleaned is enriched filtered by ``cleaned_predicate``, which
+    # the cleaned check applies itself.
+    chain = [
+        not_null("int_trips_unified", "trip_id"),
+        not_null("int_trips_unified", "taxi_type"),
+        accepted_values("int_trips_unified", "taxi_type", ["yellow", "green", "fhv", "fhvhv"]),
+        not_null("int_trips_unified", "pickup_datetime"),
+        not_null("int_trips_enriched", "trip_id"),
+        not_null("int_trips_enriched", "is_high_quality_trip"),
         accepted_values(
             "int_trips_enriched", "time_of_day", ["Morning", "Afternoon", "Evening", "Night"]
-        )
-    )
-    a.append(accepted_range("int_trips_enriched", "pickup_hour", min_value=0, max_value=23))
-    a.append(not_null("int_trips_cleaned", "trip_id"))
+        ),
+        accepted_range("int_trips_enriched", "pickup_hour", min_value=0, max_value=23),
+        not_null("int_trips_cleaned", "trip_id"),
+    ]
+    chain[-1].violation = cleaned_predicate() & chain[-1].violation
+    for c in chain:
+        c.scan = "int_trips_enriched"
+    a += chain
 
     # --- marts (dbt/models/marts/schema.yml:4-87): 14 tests ---
     a.append(not_null("fct_trips", "trip_id"))

@@ -380,8 +380,12 @@ def test_analyze_statistics_flip_join_to_broadcast(spark, tmp_path):
         spark.range(0, 200000).selectExpr(
             "id", "id % 1000 AS k"
         ).write.saveAsTable("cbo_t.fact")
+        # ~2 KB of per-row hex digests: incompressible, so the table is
+        # ~2 MB on disk and its no-stats (file-size) estimate really is
+        # over the threshold; a repeated character compresses to a few KB
         spark.range(0, 1000).selectExpr(
-            "id AS k", "repeat('x', 2000) AS pad"
+            "id AS k",
+            "concat_ws('', transform(sequence(1, 16), i -> sha2(concat(id, ':', i), 512))) AS pad",
         ).write.saveAsTable("cbo_t.dim")
         prev = {
             "spark.sql.cbo.enabled": spark.conf.get("spark.sql.cbo.enabled"),

@@ -4,6 +4,8 @@ incremental semantics."""
 
 from __future__ import annotations
 
+from dataclasses import replace
+
 import duckdb
 import pytest
 from pyspark.sql import functions as F
@@ -18,7 +20,11 @@ from lakehouse_platform_nyc_taxi_spark.models import (
     int_trips_unified,
 )
 from lakehouse_platform_nyc_taxi_spark.models.intermediate import UNIFIED_COLUMNS
-from lakehouse_platform_nyc_taxi_spark.models.staging import STAGING_MODELS
+from lakehouse_platform_nyc_taxi_spark.models.staging import (
+    STAGING_MODELS,
+    incremental_watermark_filter,
+    stg_yellow_trips,
+)
 from lakehouse_platform_nyc_taxi_spark.pipeline import Model, run_pipeline, taxi_models
 from lakehouse_platform_nyc_taxi_spark.quality import run_assertions, taxi_assertion_suite
 from lakehouse_platform_nyc_taxi_spark.quality.assertions import (
@@ -120,6 +126,136 @@ def test_assertion_suite_passes(spark_marts):
     # singular tests (36 and 37)
     assert positive_fare_threshold(spark_marts["fct_trips"]).passed
     assert valid_speed(spark_marts["fct_trips"]).passed
+
+
+@pytest.fixture(scope="module")
+def violating_build(spark, raw_paths, tmp_path_factory):
+    """A full pipeline build with violations injected: NULL trip_id and
+    NULL pickup_datetime in yellow staging, bogus and NULL taxi_type in
+    unified. Many of the NULL-trip_id rows fail the cleaned filter."""
+
+    def bad_yellow(raw):
+        stg = stg_yellow_trips(raw)
+        h = F.abs(F.xxhash64("trip_id")) % 10
+        return stg.withColumns(
+            {
+                "trip_id": F.when(h < 2, None).otherwise(F.col("trip_id")),
+                "pickup_datetime": F.when(h == 9, None).otherwise(F.col("pickup_datetime")),
+            }
+        )
+
+    def bad_unified(*staging):
+        u = int_trips_unified(*staging)
+        h = F.abs(F.xxhash64("pickup_datetime", "pickup_location_id")) % 20
+        taxi_type = F.when(h == 0, "limo").when(h == 1, None).otherwise(F.col("taxi_type"))
+        return u.withColumn("taxi_type", taxi_type)
+
+    swap = {"stg_nyc_taxi__yellow_trips": bad_yellow, "int_trips_unified": bad_unified}
+    models = [replace(m, fn=swap.get(m.name, m.fn)) for m in taxi_models()]
+    wh = str(tmp_path_factory.mktemp("violating") / "warehouse")
+    result = run_pipeline(spark, raw_paths, wh, models=models)
+    assert result.ok, result.errors
+    return result.built
+
+
+def _counts(results):
+    return [(r.name, r.model, r.failures) for r in results]
+
+
+def test_fused_chain_scan_matches_per_model(violating_build):
+    """The 9 intermediate checks, counted in one pass over
+    int_trips_enriched, give exactly the per-model counts."""
+    suite = taxi_assertion_suite()
+    assert [a.scan for a in suite].count("int_trips_enriched") == 9
+    fused = run_assertions(violating_build, suite)
+    per_model = run_assertions(violating_build, [replace(a, scan=None) for a in suite])
+    assert _counts(fused) == _counts(per_model)
+    assert [r.name for r in fused] == [a.name for a in suite]
+
+    failures = {r.name: r.failures for r in fused}
+    for name in (
+        "not_null__stg_nyc_taxi__yellow_trips__trip_id",
+        "not_null__stg_nyc_taxi__yellow_trips__pickup_datetime",
+        "not_null__int_trips_unified__taxi_type",
+        "accepted_values__int_trips_unified__taxi_type",
+    ):
+        assert failures[name] > 0, name
+    # the cleaned check applies the cleaned predicate: it sees fewer
+    # NULL trip_ids than enriched, and exactly those cleaned keeps
+    cleaned, enriched = (
+        failures["not_null__int_trips_cleaned__trip_id"],
+        failures["not_null__int_trips_enriched__trip_id"],
+    )
+    assert 0 < cleaned < enriched
+    assert cleaned == violating_build["int_trips_cleaned"].filter(F.col("trip_id").isNull()).count()
+
+
+def test_fused_scan_falls_back_to_model_when_scan_absent(violating_build):
+    """A caller passing a partial dict without the scan model still gets
+    each check counted over its own model."""
+    partial = {m: violating_build[m] for m in ("int_trips_unified", "int_trips_cleaned")}
+    subset = [a for a in taxi_assertion_suite() if a.model in partial]
+    assert len(subset) == 5 and all(a.scan == "int_trips_enriched" for a in subset)
+    fused = {r.name: r.failures for r in run_assertions(violating_build, subset)}
+    assert {r.name: r.failures for r in run_assertions(partial, subset)} == fused
+
+
+def _count_aggs(monkeypatch, df):
+    """Record every ``agg`` call on DataFrames of ``df``'s class."""
+    calls = []
+    cls = type(df)
+    agg = cls.agg
+    monkeypatch.setattr(cls, "agg", lambda self, *e: calls.append(self) or agg(self, *e))
+    return calls
+
+
+def test_suite_runs_one_aggregate_per_scan(violating_build, monkeypatch):
+    """7 models, 5 scans: stg yellow, the intermediate chain (once) and
+    the three marts."""
+    calls = _count_aggs(monkeypatch, violating_build["int_trips_enriched"])
+    results = run_assertions(violating_build, taxi_assertion_suite())
+    assert len(results) == 35
+    assert len(calls) == 5
+
+
+def test_enriched_only_adds_columns(spark_marts):
+    """The fused chain scan reads unified's columns from
+    int_trips_enriched: enriched must pass every unified column through
+    untouched (same attribute, same position) and only append new ones."""
+
+    def attrs(df):
+        out = df._jdf.queryExecution().analyzed().output()
+        return [out.apply(i).toString() for i in range(out.size())]
+
+    unified, enriched = attrs(spark_marts["unified"]), attrs(spark_marts["enriched"])
+    assert enriched[: len(unified)] == unified
+    assert len(enriched) > len(unified)
+
+
+def test_watermark_filter_single_aggregate(spark, monkeypatch):
+    """One max(struct(year, month)) aggregate gives the two-subquery
+    watermark: max year, then max month within it, NULLs ignored."""
+    raw = spark.createDataFrame(
+        [(y, m) for y in (2023, 2024, 2025) for m in (1, 6, 12)], "year int, month int"
+    )
+
+    def kept(target_rows):
+        target = spark.createDataFrame(target_rows, "year int, month int")
+        return sorted(tuple(r) for r in incremental_watermark_filter(raw, target).collect())
+
+    every = sorted(tuple(r) for r in raw.collect())
+    assert kept([(2024, 6), (2024, None), (2023, 12), (None, 12)]) == [
+        (2024, 6), (2024, 12), (2025, 1), (2025, 6), (2025, 12)
+    ]
+    # max year holds only NULL months: month >= NULL keeps no row of it
+    assert kept([(2024, None), (2023, 12)]) == [(2025, 1), (2025, 6), (2025, 12)]
+    assert kept([(None, 6)]) == every
+    assert kept([]) == every
+    assert incremental_watermark_filter(raw, None) is raw
+
+    calls = _count_aggs(monkeypatch, raw)
+    kept([(2024, 6)])
+    assert len(calls) == 1
 
 
 def test_surrogate_key_duplicates_survive_staging(spark_marts):
