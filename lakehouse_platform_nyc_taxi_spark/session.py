@@ -7,17 +7,32 @@ timestamp semantics are deterministic and oracle-comparable, and Arrow
 for any Pandas-UDF boundary. ``spark.sql.shuffle.partitions`` defaults
 to the local core count here; on a real cluster AQE's coalescing makes
 the initial number far less sensitive.
+
+Whole-stage codegen cache: Spark keeps compiled classes in an LRU of
+``spark.sql.codegen.cache.maxEntries`` entries (default 100). One taxi
+pipeline pass (build plus the 37-check suite) cycles through ~140
+distinct classes, and an LRU over a cyclic working set larger than its
+capacity never hits, so every scheduled run recompiled every class. A
+full build and three incremental re-runs, each followed by the suite,
+compiled 187 distinct classes with a 2000-entry cache; 512 leaves ~2.5x
+headroom and gives the same per-pass compile counts as 2000. The conf is
+static: it takes effect only in a session built from ``RUNTIME_CONFS``.
+A session built elsewhere (such as the one ``__spark_entry__.entry``
+receives) keeps its own cache size, and ``apply_runtime_confs`` leaves it
+alone.
 """
 
 from __future__ import annotations
 
 import os
 
+from pyspark.errors import PySparkException
 from pyspark.sql import SparkSession
 
 # Session-level confs that every entry point (our factory, the driver's
 # externally created session, tests) must agree on for deterministic,
-# oracle-comparable results. All of these are runtime-settable SQL confs.
+# oracle-comparable results. All but the codegen cache size are
+# runtime-settable SQL confs; static ones apply only at session creation.
 RUNTIME_CONFS: dict[str, str] = {
     # Deterministic timestamp semantics; DuckDB timestamps are naive/UTC.
     "spark.sql.session.timeZone": "UTC",
@@ -35,6 +50,8 @@ RUNTIME_CONFS: dict[str, str] = {
     # Incremental materializer rewrites only the partitions present in
     # the incoming batch (see sources.writers.incremental_delete_insert).
     "spark.sql.sources.partitionOverwriteMode": "dynamic",
+    # Static: holds a pipeline pass's compiled classes (module docstring).
+    "spark.sql.codegen.cache.maxEntries": "512",
 }
 
 
@@ -47,13 +64,20 @@ def apply_runtime_confs(spark: SparkSession) -> SparkSession:
 
     The bench/correctness driver hands us its own SparkSession; this makes
     query results independent of how that session was constructed.
+    Confs the session cannot modify (static ones) are skipped: a failing
+    ``conf.set`` costs a JVM exception and its Py4J translation, about
+    30x a successful set, and ``sources.testdata.load_table`` calls this
+    on every table load.
     """
+    conf = spark.conf
     for k, v in RUNTIME_CONFS.items():
+        if not conf.isModifiable(k):
+            continue
         try:
-            spark.conf.set(k, v)
-        except Exception:
-            # A conf may be static in some deployments; results then
-            # depend on the host session, which is the best we can do.
+            conf.set(k, v)
+        except PySparkException:
+            # A deployment may lock a runtime conf; results then depend
+            # on the host session, which is the best we can do.
             pass
     return spark
 
