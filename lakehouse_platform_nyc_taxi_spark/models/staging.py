@@ -13,10 +13,13 @@ projection+filter over the scan; filters push down to parquet.
 
 from __future__ import annotations
 
+from collections.abc import Iterable
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.trino import surrogate_key
+from ..sources.writers import nulls_first
 
 
 def _validity_filter(df: DataFrame, pickup: str, dropoff: str, extra) -> DataFrame:
@@ -137,14 +140,36 @@ def incremental_watermark_filter(raw: DataFrame, target: DataFrame | None) -> Da
     ``max(struct(year, month))`` orders by year, then month, with NULL
     fields lowest, so it equals Trino's two scalar subqueries (max year,
     then max month within it); the resulting literal predicate
-    partition-prunes the raw scan.
+    partition-prunes the raw scan. The pipeline's parquet targets skip
+    the aggregate: ``partition_watermark`` reads the same value from
+    their partition directories.
     """
     if target is None:
         return raw
     mx = target.agg(F.max(F.struct("year", "month")).alias("w")).first().w
-    if mx is None or mx.year is None:
+    return watermark_filter(raw, None if mx is None else (mx.year, mx.month))
+
+
+def partition_watermark(
+    parts: Iterable[tuple[str | None, str | None]],
+) -> tuple[int | None, int | None] | None:
+    """``max(struct(year, month))`` over a target's ``(year, month)``
+    partition directories (``sources.writers.partition_values``): NULL
+    (``__HIVE_DEFAULT_PARTITION__``) ranks lowest, as in the aggregate.
+    ``None`` when the target has no partitions."""
+    typed = [tuple(None if v is None else int(v) for v in p) for p in parts]
+    return max(typed, key=nulls_first, default=None)
+
+
+def watermark_filter(
+    raw: DataFrame, watermark: tuple[int | None, int | None] | None
+) -> DataFrame:
+    """Keep the rows at or after the ``(year, month)`` watermark; all of
+    ``raw`` when there is none or its year is NULL. A NULL month keeps
+    no row of the watermark year (``month >= NULL``)."""
+    if watermark is None or watermark[0] is None:
         return raw
+    year, month = watermark
     return raw.filter(
-        (F.col("year") > mx.year)
-        | ((F.col("year") == mx.year) & (F.col("month") >= mx.month))
+        (F.col("year") > year) | ((F.col("year") == year) & (F.col("month") >= month))
     )

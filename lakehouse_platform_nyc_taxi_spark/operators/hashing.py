@@ -13,9 +13,6 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-#: DuckDB rendering of md5_long(x) for oracle SQL.
-MD5_LONG_SQL = "('0x' || substr(md5({x}), 1, 15))::BIGINT"
-
 
 def md5_long(col: Column) -> Column:
     """First 15 hex digits of md5 as BIGINT (non-negative, < 2^60)."""
@@ -25,10 +22,6 @@ def md5_long(col: Column) -> Column:
 def seeded_md5_long(col: Column, seed: int) -> Column:
     """A family of independent hash functions via seed suffixing."""
     return md5_long(F.concat(col, F.lit(f"#{seed}")))
-
-
-def seeded_md5_long_sql(x: str, seed: int) -> str:
-    return MD5_LONG_SQL.format(x=f"{x} || '#{seed}'")
 
 
 #: Mersenne prime 2^31 - 1: the modulus of the affine hash family. Products

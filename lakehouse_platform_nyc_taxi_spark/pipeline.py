@@ -11,6 +11,21 @@ whole staging->unified->enriched->cleaned chain into the mart jobs, so the
 pipeline writes exactly two kinds of files: staging increments and mart
 tables. That is the same physical behavior a 100 TB run wants (no
 intermediate materialization, one shuffle per mart aggregate).
+
+Fixed jobs. A Spark job costs tens of milliseconds before it does any
+work, and at monthly-increment sizes that fixed cost dominates a run. So
+facts the lake's layout or the runner already holds are not asked of
+Spark: an incremental staging model takes its watermark from the target's
+``year=*/month=*`` partition directories (the parquet analogue of Hive or
+Iceberg partition metadata: one file-system listing instead of a read of
+the target plus a two-job aggregate), and every materialized output is
+read back with the schema of the DataFrame just written instead of
+inferring it from a parquet footer (one job each). An incremental staging
+model now runs 7 jobs instead of 11: the raw read's schema inference,
+``incremental_delete_insert``'s read of the target, its 2-job partition
+collect and its 3 write jobs. On the test fixture a full build runs 19
+jobs and an incremental re-run 35, instead of 26 and 54. Snapshot staging
+models keep the aggregate watermark over their table.
 """
 
 from __future__ import annotations
@@ -31,7 +46,18 @@ from .models import (
     int_trips_enriched,
     int_trips_unified,
 )
-from .sources.writers import _path_exists, incremental_delete_insert, overwrite_table
+from .models.staging import (
+    incremental_watermark_filter,
+    partition_watermark,
+    watermark_filter,
+)
+from .sources.writers import (
+    _path_exists,
+    incremental_delete_insert,
+    overwrite_table,
+    partition_values,
+    read_back,
+)
 
 
 @dataclass
@@ -176,23 +202,23 @@ def run_pipeline(
                     if full_refresh and _path_exists(spark, path):
                         overwrite_table(df, path, model.partition_by or None)
                     else:
-                        from .models.staging import incremental_watermark_filter
-
-                        target = (
-                            spark.read.parquet(path)
-                            if _path_exists(spark, path)
-                            else None
+                        # The watermark is the target's max (year, month)
+                        # partition directory: the parquet analogue of
+                        # asking Hive or Iceberg partition metadata, with
+                        # no read of the target and no aggregate job.
+                        # incremental_delete_insert is its only reader,
+                        # and with the schema-free read-back below the
+                        # model runs 7 jobs instead of 11.
+                        watermark = partition_watermark(
+                            partition_values(spark, path, ("year", "month"))
                         )
-                        if target is not None:
-                            raw_df = inputs[0]
-                            filtered_raw = incremental_watermark_filter(raw_df, target)
-                            df = model.fn(filtered_raw)
+                        if watermark is not None:
+                            df = model.fn(watermark_filter(inputs[0], watermark))
                         incremental_delete_insert(
                             spark, df, path, model.unique_key, model.partition_by
                         )
-                    ctx[model.name] = spark.read.parquet(path)
+                    ctx[model.name] = read_back(df, path)
                 elif model.materialized == "snapshot":
-                    from .models.staging import incremental_watermark_filter
                     from .sources import snapshots as snap
 
                     if snap.current_version(path) is None:
@@ -236,7 +262,7 @@ def run_pipeline(
                         )
                     else:
                         overwrite_table(df, path, model.partition_by or None)
-                    ctx[model.name] = spark.read.parquet(path)
+                    ctx[model.name] = read_back(df, path)
                 else:  # view
                     ctx[model.name] = df
                 ctx[model.name].createOrReplaceTempView(model.name)

@@ -1,5 +1,4 @@
-"""Source readers mirroring SURVEY.md §2.1 (S1-S4) plus the general
-Spark source surface the platform's ad-hoc endpoint implies.
+"""Source readers mirroring SURVEY.md §2.1 (S3 and S4).
 
 Everything is schema-on-read by default (the reference's raw layer
 contract, ingest_spark_bulk.py:137/150); staging models pin types with
@@ -7,9 +6,6 @@ explicit cast projections (models.staging).
 """
 
 from __future__ import annotations
-
-import os
-from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -22,61 +18,6 @@ def read_parquet(spark: SparkSession, path: str, merge_schema: bool = False) -> 
     return reader.parquet(path)
 
 
-def read_csv(spark: SparkSession, path: str, schema=None, header: bool = True) -> DataFrame:
-    reader = spark.read.option("header", str(header).lower())
-    if schema is not None:
-        reader = reader.schema(schema)  # never inferSchema at scale
-    else:
-        reader = reader.option("inferSchema", "true")
-    return reader.csv(path)
-
-
-def read_json(spark: SparkSession, path: str, schema=None) -> DataFrame:
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.json(path)
-
-
-def read_orc(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.orc(path)
-
-
-def read_binary_files(spark: SparkSession, path: str, glob: str | None = None) -> DataFrame:
-    """Opaque-binary source for multimodal columns (operators.multimodal):
-    columns (path, modificationTime, length, content binary)."""
-    reader = spark.read.format("binaryFile")
-    if glob:
-        reader = reader.option("pathGlobFilter", glob)
-    return reader.load(path)
-
-
-def fetch_http_to_file(url: str, dest_path: str, timeout: int = 300) -> str | None:
-    """S1: driver-side HTTP fetch of a source file (ingest_spark_bulk.py:86-115).
-
-    Returns the local path, or None on a 404 (the reference treats a
-    missing monthly file as skip, :165-168). Gated behind an import-try:
-    offline containers simply skip HTTP ingestion.
-    """
-    try:
-        import requests  # noqa: PLC0415
-    except ImportError:
-        return None
-    resp = requests.get(url, timeout=timeout)
-    if resp.status_code == 404:
-        return None
-    resp.raise_for_status()
-    os.makedirs(os.path.dirname(dest_path) or ".", exist_ok=True)
-    with open(dest_path, "wb") as f:
-        f.write(resp.content)
-    return dest_path
-
-
 def read_table(spark: SparkSession, name: str) -> DataFrame:
     """S4: catalog table scan (`spark.table`)."""
     return spark.table(name)
-
-
-def create_database(spark: SparkSession, name: str) -> None:
-    """S10: `CREATE DATABASE IF NOT EXISTS` (ingest_spark_bulk.py:220)."""
-    spark.sql(f"CREATE DATABASE IF NOT EXISTS {name}")

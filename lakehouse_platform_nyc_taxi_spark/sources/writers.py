@@ -19,6 +19,7 @@ Reference parity notes:
 from __future__ import annotations
 
 from collections.abc import Sequence
+from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -30,6 +31,44 @@ def _path_exists(spark: SparkSession, path: str) -> bool:
     jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
     fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
     return bool(fs.exists(jpath))
+
+
+def nulls_first(values: Sequence) -> tuple:
+    """Sort key for partition tuples in Spark's struct order: field by
+    field, NULL below every value."""
+    return tuple((v is not None, v) for v in values)
+
+
+def partition_values(
+    spark: SparkSession, path: str, partition_by: Sequence[str]
+) -> list[tuple[str | None, ...]]:
+    """The partition tuples a hive-layout table holds, from its directory
+    names alone: one Hadoop ``globStatus`` of ``col=*/col=*``, no Spark
+    job and no data or footer read. Values come back as the unescaped
+    directory strings, ``None`` for ``__HIVE_DEFAULT_PARTITION__``; a
+    missing or empty table has none.
+    """
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(
+        path + "".join(f"/{c}=*" for c in partition_by)
+    )
+    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    out = []
+    for status in fs.globStatus(jpath) or []:
+        names = status.getPath().toUri().getPath().split("/")[-len(partition_by):]
+        values = (unquote(n.split("=", 1)[1]) for n in names)
+        out.append(tuple(None if v == "__HIVE_DEFAULT_PARTITION__" else v for v in values))
+    return out
+
+
+def read_back(df: DataFrame, path: str) -> DataFrame:
+    """Read the table just written from ``df`` without a schema-inference
+    job: ``df.schema`` is supplied, so no parquet footer is read. The frame
+    equals a plain ``spark.read.parquet(path)``: Spark places partition
+    columns after the data columns in directory order, and a file source
+    forces every field nullable, so ``IS NULL`` checks downstream are not
+    folded away by a non-null flag of the writing plan.
+    """
+    return df.sparkSession.read.schema(df.schema).parquet(path)
 
 
 def append_partitioned(
@@ -98,7 +137,7 @@ def incremental_delete_insert(
     unique_key: Sequence[str],
     partition_by: Sequence[str] = ("year", "month"),
     delete_scope: str = "partition",
-) -> None:
+) -> list[tuple] | None:
     """S9: dbt ``incremental_strategy='delete+insert'`` on parquet.
 
     First run -> plain CTAS. Subsequent runs: within the partitions the
@@ -119,6 +158,10 @@ def incremental_delete_insert(
     against the batch keys and rewritten (dbt-equivalent result, at
     full-table-rewrite cost — the honest price of cross-partition DELETE
     without a snapshotting table format).
+
+    Returns the partition tuples it rewrote (values of ``partition_by``,
+    sorted NULL first), ``[]`` for an empty batch, or ``None`` when it
+    wrote the whole table: the first-run CTAS and ``delete_scope="table"``.
     """
     if delete_scope not in ("partition", "table"):
         raise ValueError(f"delete_scope must be 'partition' or 'table', got {delete_scope!r}")
@@ -134,7 +177,7 @@ def incremental_delete_insert(
             path,
             partition_by,
         )
-        return
+        return None
     existing = spark.read.parquet(path)
 
     if delete_scope == "table":
@@ -147,14 +190,17 @@ def incremental_delete_insert(
         # plain parquet.
         result = result.localCheckpoint()
         overwrite_table(result, path, partition_by)
-        return
+        return None
 
     # Restrict the rewrite to the batch's partitions. The distinct list
     # of (year, month) pairs is tiny (one per ingested month) — a safe
     # driver-side collect, mirroring the reference's scalar watermark.
-    parts = [tuple(r) for r in batch.select(*partition_by).distinct().collect()]
+    parts = sorted(
+        (tuple(r) for r in batch.select(*partition_by).distinct().collect()),
+        key=nulls_first,
+    )
     if not parts:
-        return
+        return parts
     part_pred = F.lit(False)
     for values in parts:
         cond = F.lit(True)
@@ -182,6 +228,7 @@ def incremental_delete_insert(
         .partitionBy(*partition_by)
         .parquet(path)
     )
+    return parts
 
 
 def write_bucketed(

@@ -4,6 +4,7 @@ incremental semantics."""
 
 from __future__ import annotations
 
+import uuid
 from dataclasses import replace
 
 import duckdb
@@ -23,7 +24,9 @@ from lakehouse_platform_nyc_taxi_spark.models.intermediate import UNIFIED_COLUMN
 from lakehouse_platform_nyc_taxi_spark.models.staging import (
     STAGING_MODELS,
     incremental_watermark_filter,
+    partition_watermark,
     stg_yellow_trips,
+    watermark_filter,
 )
 from lakehouse_platform_nyc_taxi_spark.pipeline import Model, run_pipeline, taxi_models
 from lakehouse_platform_nyc_taxi_spark.quality import run_assertions, taxi_assertion_suite
@@ -31,6 +34,7 @@ from lakehouse_platform_nyc_taxi_spark.quality.assertions import (
     positive_fare_threshold,
     valid_speed,
 )
+from lakehouse_platform_nyc_taxi_spark.sources.writers import partition_values
 
 from . import taxi_oracle
 from .oracle_utils import compare_frames
@@ -256,6 +260,102 @@ def test_watermark_filter_single_aggregate(spark, monkeypatch):
     calls = _count_aggs(monkeypatch, raw)
     kept([(2024, 6)])
     assert len(calls) == 1
+
+
+@pytest.mark.parametrize(
+    "months, want",
+    [
+        # months 9 and 10: the directory strings must rank as numbers
+        ([(2023, 12), (2024, 9), (2024, 10), (2024, 2)], (2024, 10)),
+        ([(None, 12), (2024, 6), (2023, 7)], (2024, 6)),
+        ([(None, 3)], (None, 3)),
+        ([(2024, None), (2023, 12)], (2024, None)),
+        ([(2024, None), (2024, 3), (2023, 12)], (2024, 3)),
+        ([], None),
+    ],
+)
+def test_listed_watermark_matches_aggregate(spark, tmp_path, months, want):
+    """The watermark read from a target's partition directories equals
+    ``max(struct(year, month))`` over the same table, and both filter the
+    raw input alike: normal months, a NULL year partition, a NULL month
+    in the max year, and a table with no partitions (missing, or an empty
+    directory)."""
+    path = str(tmp_path / "target")
+    raw = spark.createDataFrame(
+        [(y, m) for y in (2023, 2024, 2025) for m in (1, 3, 6, 10, 12)], "year int, month int"
+    )
+    if months:
+        data = [(i, y, m) for i, (y, m) in enumerate(months)]
+        target = spark.createDataFrame(data, "k int, year int, month int")
+        target.write.partitionBy("year", "month").parquet(path)
+        target = spark.read.parquet(path)
+    else:
+        target = spark.createDataFrame([], "k int, year int, month int")
+    mx = target.agg(F.max(F.struct("year", "month")).alias("w")).first().w
+    assert (None if mx is None else tuple(mx)) == want
+
+    listed = partition_watermark(partition_values(spark, path, ("year", "month")))
+    assert listed == want
+    if not months:
+        (tmp_path / "target").mkdir()
+        assert partition_values(spark, path, ("year", "month")) == []
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    assert rows(watermark_filter(raw, listed)) == rows(incremental_watermark_filter(raw, target))
+
+
+@pytest.fixture(scope="module")
+def build_jobs(spark, raw_paths, tmp_path_factory):
+    """A full build, then an incremental re-run, each in its own job
+    group: (warehouse, {"full"/"incremental": (result, Spark job count)})."""
+    sc = spark.sparkContext
+    wh = str(tmp_path_factory.mktemp("job_budget") / "warehouse")
+    runs = {}
+    for run in ("full", "incremental"):
+        group = f"taxi-{run}-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            result = run_pipeline(spark, raw_paths, wh)
+        finally:
+            sc._jsc.clearJobGroup()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        assert result.ok, result.errors
+        runs[run] = (result, len(sc.statusTracker().getJobIdsForGroup(group)))
+    return wh, runs
+
+
+#: Spark jobs per build at fixture scale. The watermark comes from the
+#: staging targets' partition directories and every materialized model is
+#: read back with a known schema; reading the targets for the watermark
+#: and inferring the read-back schemas cost 26 and 54 jobs.
+JOB_BUDGET = {"full": 19, "incremental": 35}
+
+
+@pytest.mark.parametrize("run", ["full", "incremental"])
+def test_build_job_budget(build_jobs, run):
+    """Job counts repeat exactly from run to run: a count above the budget
+    is a new fixed cost in the build, not noise."""
+    _wh, runs = build_jobs
+    assert runs[run][1] <= JOB_BUDGET[run], runs[run][1]
+
+
+@pytest.mark.parametrize("run", ["full", "incremental"])
+def test_read_back_matches_plain_read(spark, build_jobs, run):
+    """Each of the 7 materialized models is read back with the schema of
+    the frame just written. That frame equals a plain read of its path:
+    names, order, types, nullability and rows."""
+    wh, runs = build_jobs
+    result = runs[run][0]
+    materialized = [m.name for m in taxi_models() if m.materialized in ("incremental", "table")]
+    assert len(materialized) == 7
+    for name in materialized:
+        got, plain = result.built[name], spark.read.parquet(f"{wh}/{name}")
+        assert got.schema == plain.schema, name
+        if run == "incremental":  # the full build's files were since rewritten
+            assert got.exceptAll(plain).count() == 0 and plain.exceptAll(got).count() == 0, name
+            assert got.count() == plain.count() > 0, name
 
 
 def test_surrogate_key_duplicates_survive_staging(spark_marts):

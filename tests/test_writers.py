@@ -83,6 +83,24 @@ def test_incremental_table_scope_deletes_cross_partition(spark, tmp_path):
     assert ids == ["k1", "k1", "k2"]
 
 
+def test_incremental_delete_insert_returns_rewritten_partitions(spark, tmp_path):
+    """The partitions a run rewrote, sorted NULL first; ``[]`` for an
+    empty batch; ``None`` when the run wrote the whole table."""
+    path = str(tmp_path / "ret")
+    first = _mk(spark, [("k1", 1, 2023, 1), ("k2", 1, 2023, 2)])
+    assert incremental_delete_insert(spark, first, path, ["id"]) is None
+    two_months = _mk(
+        spark, [("k3", 1, 2024, 1), ("k2", 9, 2023, 2), ("k4", 1, 2023, 2), ("k5", 1, 2024, 1)]
+    )
+    assert incremental_delete_insert(spark, two_months, path, ["id"]) == [(2023, 2), (2024, 1)]
+    assert incremental_delete_insert(spark, _mk(spark, []), path, ["id"]) == []
+    null_month = _mk(spark, [("k6", 1, 2023, 2), ("k7", 1, 2023, None)])
+    assert incremental_delete_insert(spark, null_month, path, ["id"]) == [(2023, None), (2023, 2)]
+    assert incremental_delete_insert(spark, first, path, ["id"], delete_scope="table") is None
+    got = {(r.id, r.v) for r in spark.read.parquet(path).collect()}
+    assert got == {("k1", 1), ("k2", 1), ("k3", 1), ("k4", 1), ("k5", 1), ("k6", 1), ("k7", 1)}
+
+
 def test_overwrite_table(spark, tmp_path):
     path = str(tmp_path / "ctas")
     overwrite_table(_mk(spark, [("a", 1, 2023, 1)]), path)
