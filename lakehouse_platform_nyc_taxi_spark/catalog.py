@@ -16,12 +16,11 @@ Glue on a cluster).
 
 Layer mapping mirrors dbt_project.yml: ``stg_*`` -> staging, ``int_*``
 -> intermediate, ``fct_*``/``dim_*`` -> marts, raw inputs -> raw.
-The intermediate layer is cataloged the way dbt materializes it — as
-*views* with stored SQL text (``models.intermediate_views``), chained
-view-on-view over the cataloged staging tables — while the in-pipeline
-models stay unmaterialized DataFrame lineage so Catalyst keeps fusing
-the whole chain into the mart jobs. Both access paths are pinned equal
-by tests/test_catalog.py.
+The intermediate layer is cataloged the way dbt materializes it: as
+*views* chained view-on-view over the cataloged staging tables. The
+pipeline and the catalog run one SQL text (``models.intermediate``); in
+the pipeline it binds DataFrames instead of catalog names, so the models
+stay unmaterialized lineage that Catalyst fuses into the mart jobs.
 """
 
 from __future__ import annotations

@@ -889,8 +889,7 @@ def dedup_cluster_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     # NOT fenced (r18 A/B: fence 1.76 s vs no fence 1.48 s min-of-3
     # interleaved): connected_components' output is already
     # lineage-fenced internally, so the three consumers replan only
-    # cheap joins — a localCheckpoint here adds an eager job and erases
-    # size stats for nothing.
+    # cheap joins — a localCheckpoint here adds an eager job for nothing.
     cs = lab.select("cluster", "source").distinct()
     per = cs.groupBy("source").agg(F.count(F.lit(1)).alias("n"))
     sh = (
@@ -909,9 +908,9 @@ def dedup_cluster_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = per.select(F.col("source").alias("source_b"))
     return (
         # explicit broadcast: per is one row per SOURCE (bounded by the
-        # crawl count); the fenced RDD lineage carries no size stats, so
-        # without the hint the non-equi source-pair join degenerates to a
-        # CartesianProduct plan over the unknown-size side
+        # crawl count), but the fenced side's size estimate is an upper
+        # bound scaled from the crawl input, so without the hint the
+        # non-equi source-pair join can degenerate to a CartesianProduct
         a.join(F.broadcast(b), F.col("source_a") != F.col("source_b"))
         .join(
             sh,

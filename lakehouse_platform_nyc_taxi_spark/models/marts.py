@@ -54,12 +54,12 @@ def fct_trips(cleaned: DataFrame) -> DataFrame:
     return cleaned.select(*FCT_TRIPS_COLUMNS)
 
 
-def fct_trips_daily(trips: DataFrame, with_created_at: bool = True) -> DataFrame:
+def fct_trips_daily(trips: DataFrame) -> DataFrame:
     """fct_trips_daily.sql:14-51 — grain (trip_date, taxi_type, year, month).
 
     ``avg_speed_mph`` is an unweighted mean of per-trip means — kept as-is
-    (SURVEY.md §7.4). ``with_created_at=False`` drops the nondeterministic
-    audit column for oracle comparison.
+    (SURVEY.md §7.4). The last column, ``created_at``, is the
+    nondeterministic audit timestamp.
     """
     agg = (
         trips.groupBy(
@@ -92,12 +92,10 @@ def fct_trips_daily(trips: DataFrame, with_created_at: bool = True) -> DataFrame
             F.sum(F.when(F.col("time_of_day") == "Night", 1).otherwise(0)).alias("trips_night"),
         )
     )
-    if with_created_at:
-        agg = agg.withColumn("created_at", F.current_timestamp())
-    return agg
+    return agg.withColumn("created_at", F.current_timestamp())
 
 
-def fct_trips_monthly(trips: DataFrame, with_created_at: bool = True) -> DataFrame:
+def fct_trips_monthly(trips: DataFrame) -> DataFrame:
     """fct_trips_monthly.sql:14-51 — grain (year, month, taxi_type)."""
     pct = lambda cond: trino_round(  # noqa: E731 — avg-of-case ratio, :41-46
         F.avg(F.when(cond, 1.0).otherwise(0.0)) * 100, 1
@@ -143,7 +141,4 @@ def fct_trips_monthly(trips: DataFrame, with_created_at: bool = True) -> DataFra
         "revenue_per_trip", "total_passengers", "avg_passengers", "pct_morning",
         "pct_afternoon", "pct_evening", "pct_night", "pct_weekend",
     ]
-    agg = agg.select(*ordered)
-    if with_created_at:
-        agg = agg.withColumn("created_at", F.current_timestamp())
-    return agg
+    return agg.select(*ordered).withColumn("created_at", F.current_timestamp())

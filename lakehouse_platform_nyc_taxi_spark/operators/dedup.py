@@ -1542,10 +1542,11 @@ def hamming_banded_pairs(
         #
         # SIDE EFFECT (ADVICE r18): the fence is EAGER — constructing
         # this operator runs the fingerprint pipeline even if the result
-        # is never consumed — and it erases Catalyst size stats on the
-        # fenced side (downstream equi-joins lose auto-broadcast
-        # eligibility; the banded candidate join itself is equi-keyed,
-        # pinned cartesian-free by tests/test_plans.py). The band table
+        # is never consumed — and the fenced side keeps only the
+        # pipeline's upper-bound size estimate, scaled from the inputs
+        # (downstream equi-joins auto-broadcast it only when that bound
+        # fits; the banded candidate join itself is equi-keyed, pinned
+        # cartesian-free by tests/test_plans.py). The band table
         # is one row per ASSET — corpus-scale — so the fence is
         # size-guarded: past the estimate budget it stays lazy and the
         # two join sides replan the pipeline instead of materializing

@@ -13,10 +13,14 @@ and hands every consumer the materialized rows.
    truncates lineage — at 100 TB an unbounded artifact (one row per
    basket / per distinct shingle / per vector) can exceed storage, and
    a lost executor can no longer recompute its slice;
-2. it erases Catalyst size stats, so a downstream non-equi join can
-   flip to CartesianProduct (the r18 containment incident; bounded
-   sides get an explicit ``F.broadcast`` and tests/test_plans.py pins
-   no-cartesian-below-fence).
+2. the checkpointed plan keeps the origin plan's size estimate, and
+   that estimate is an upper bound scaled from the input file sizes,
+   not the artifact's size (a 25-row aggregate over a 200k-row file
+   keeps a 0.8 MB estimate for 2 KB of rows). A downstream non-equi join
+   over a small artifact can still miss broadcast and flip to
+   CartesianProduct (the r18 containment incident; bounded sides get an
+   explicit ``F.broadcast`` and tests/test_plans.py pins both the
+   estimate and no-cartesian-below-fence).
 
 :func:`fence_if_small` keeps the fence when the optimizer's size
 estimate says the artifact is comfortably executor-memory-small, and

@@ -51,8 +51,9 @@ def pagerank(
     ``bounded_nodes=True`` is the caller's assertion that the NODE
     table is bounded metadata (category/region-level graphs, ≤
     broadcast size): each iteration then broadcasts the rank/out-weight
-    sides into the edge join (the checkpointed frames carry no size
-    stats, so Catalyst cannot pick this itself) and computes the
+    sides into the edge join (the checkpointed frames keep an
+    upper-bound size estimate scaled from the edge input, so Catalyst
+    cannot pick this itself) and computes the
     dangling mass as a global decimal window sum inside the SAME
     per-node frame instead of a separate anti-join subtree crossJoined
     back in — same decimal(28,8) fence, value-identical by
@@ -326,8 +327,9 @@ def label_propagation(
     every ``checkpoint_every`` iterations like :func:`pagerank`.
     ``bounded_nodes=True`` (caller-asserted bounded node table — see
     :func:`pagerank`) broadcasts the label vector into each iteration's
-    edge join; the checkpointed frames carry no size stats, so Catalyst
-    cannot pick this itself. Join strategy only — values unchanged.
+    edge join; the checkpointed frames keep an upper-bound size estimate
+    scaled from the edge input, so Catalyst cannot pick this itself.
+    Join strategy only — values unchanged.
     Returns (id, label).
     """
     from pyspark.sql import Window
@@ -584,8 +586,9 @@ def hits(
     ``bounded_nodes=True`` is the caller's assertion that the NODE table
     is bounded metadata (category/region-level graphs, ≤ broadcast
     size): each half-step then broadcasts the ≤|nodes|-row score side
-    into the edge join (the checkpointed frames carry no size stats, so
-    Catalyst cannot pick this itself) and L1-normalizes via one global
+    into the edge join (the checkpointed frames keep an upper-bound size
+    estimate scaled from the edge input, so Catalyst cannot pick this
+    itself) and L1-normalizes via one global
     decimal window sum instead of a separate 1-row aggregate — which
     removes the SECOND evaluation of every half-step subtree (Spark
     replans the raw-score subtree under both the join and the

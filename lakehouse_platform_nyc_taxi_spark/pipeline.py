@@ -279,7 +279,7 @@ def run_pipeline(
 
     if register_catalog:
         from .catalog import register_pipeline_outputs
-        from .models.intermediate_views import register_intermediate_views
+        from .models.intermediate import register_intermediate_views
 
         materialized = {
             m.name: (f"{warehouse_dir}/{m.name}", bool(m.partition_by))
@@ -288,11 +288,9 @@ def run_pipeline(
         }
         register_pipeline_outputs(spark, raw_paths, materialized)
         # dbt materializes the intermediate layer as catalog VIEWS with
-        # stored SQL (dbt_project.yml:20-23). The in-pipeline models stay
-        # unmaterialized DataFrame lineage (fused into the marts); the
-        # views give fresh sessions the same access path over the
-        # cataloged staging tables. Only for the standard taxi DAG —
-        # custom model lists don't have SQL twins.
+        # stored SQL (dbt_project.yml:20-23): the same SQL text the
+        # pipeline just ran, over the cataloged staging tables. Only for
+        # the standard taxi DAG; custom model lists have no stored text.
         if {m.name for m in models} >= {
             "int_trips_unified",
             "int_trips_enriched",

@@ -96,6 +96,14 @@ def overwrite_table(
     writer.parquet(path)
 
 
+def _partition_dir(spark: SparkSession, path: str, partition_values: dict[str, object]):
+    """The Hadoop path of one hive-layout partition directory,
+    ``path/col=val/...``, and its filesystem."""
+    subdir = "/".join(f"{col}={val}" for col, val in partition_values.items())
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(f"{path}/{subdir}")
+    return jpath, jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+
+
 def delete_partition(
     spark: SparkSession,
     path: str,
@@ -107,10 +115,7 @@ def delete_partition(
     ``DELETE FROM t WHERE year=Y AND month=M``): remove the partition
     directory, never touching data in other partitions.
     """
-    subdir = "/".join(f"{col}={val}" for col, val in partition_values.items())
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(f"{path}/{subdir}")
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    jpath, fs = _partition_dir(spark, path, partition_values)
     if fs.exists(jpath):
         fs.delete(jpath, True)
 
@@ -118,16 +123,11 @@ def delete_partition(
 def partition_exists(spark: SparkSession, path: str, partition_values: dict[str, object]) -> bool:
     """S11: partition existence probe; missing table -> False.
 
-    Filters on partition columns only, so Catalyst answers it from
-    partition-directory pruning without scanning data files.
+    One Hadoop ``exists`` of the partition directory: no Spark job, no
+    schema inference and no data read.
     """
-    if not _path_exists(spark, path):
-        return False
-    df = spark.read.parquet(path)
-    cond = F.lit(True)
-    for col, val in partition_values.items():
-        cond = cond & (F.col(col) == F.lit(val))
-    return df.filter(cond).limit(1).count() > 0
+    jpath, fs = _partition_dir(spark, path, partition_values)
+    return bool(fs.exists(jpath))
 
 
 def incremental_delete_insert(
@@ -222,12 +222,7 @@ def incremental_delete_insert(
     # of one table; if a single month ever outgrows a task, salt the
     # repartition — see compact_table.)
     result = result.repartition(*[F.col(c) for c in partition_by])
-    (
-        result.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(*partition_by)
-        .parquet(path)
-    )
+    dynamic_partition_overwrite(result, path, partition_by)
     return parts
 
 
@@ -297,10 +292,7 @@ def compact_table(
     # localCheckpoint cuts lineage to the files being overwritten —
     # without it the rewrite would read and replace its own input
     out = out.localCheckpoint()
-    writer = out.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
+    overwrite_table(out, path, partition_by)
     return n_files
 
 

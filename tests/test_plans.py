@@ -1107,3 +1107,28 @@ def test_fence_sites_never_cartesian_below(spark):
             assert "BroadcastNestedLoopJoin" not in plan, (
                 f"{name} planned a nested-loop join below a fence"
             )
+
+
+def test_local_checkpoint_keeps_upper_bound_size_estimate(spark, tmp_path):
+    """A fence does not erase the Catalyst size estimate: the checkpointed
+    ``LogicalRDD`` keeps the estimate of the plan it materialized. That
+    estimate is an upper bound scaled from the input files, so a 25-row
+    aggregate over a 200k-row file is still estimated far above the bytes
+    the checkpoint holds. This is why bounded fenced sides carry explicit
+    broadcast hints."""
+    path = str(tmp_path / "t")
+    spark.range(200_000).selectExpr("id % 25 AS k", "id AS v").write.parquet(path)
+    agg = spark.read.parquet(path).groupBy("k").count()
+    fenced = agg.localCheckpoint()
+
+    def estimate(df) -> int:
+        return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+
+    assert estimate(fenced) == estimate(agg)
+    rdd_id = fenced._jdf.queryExecution().optimizedPlan().rdd().id()
+    held = {
+        i.id(): i.memSize() + i.diskSize()
+        for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()
+    }[rdd_id]
+    assert fenced.count() == 25
+    assert estimate(fenced) > 100 * held > 0

@@ -67,8 +67,8 @@ def spark_marts(spark, raw_paths):
         "enriched": enriched,
         "cleaned": cleaned,
         "fct_trips": trips.drop("loaded_at"),
-        "fct_trips_daily": fct_trips_daily(trips, with_created_at=False),
-        "fct_trips_monthly": fct_trips_monthly(trips, with_created_at=False),
+        "fct_trips_daily": fct_trips_daily(trips).drop("created_at"),
+        "fct_trips_monthly": fct_trips_monthly(trips).drop("created_at"),
     }
 
 

@@ -3,6 +3,8 @@ delete+insert incremental materializer (SURVEY.md S6/S9/S11/S12)."""
 
 from __future__ import annotations
 
+import uuid
+
 from pyspark.sql import functions as F
 
 from lakehouse_platform_nyc_taxi_spark.sources.writers import (
@@ -30,6 +32,27 @@ def test_append_and_partition_ops(spark, tmp_path):
     left = spark.read.parquet(path)
     assert left.count() == 1
     assert left.first().id == "a"
+
+
+def test_partition_exists_launches_no_job(spark, tmp_path):
+    """The probe answers from the partition directory: a present, an
+    absent and a missing-table probe run no Spark job between them."""
+    path = str(tmp_path / "t")
+    append_partitioned(_mk(spark, [("a", 1, 2023, 1)]), path)
+    sc = spark.sparkContext
+    group = f"partition-exists-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        probes = [
+            partition_exists(spark, path, {"year": 2023, "month": 1}),
+            partition_exists(spark, path, {"year": 2023, "month": 2}),
+            partition_exists(spark, str(tmp_path / "missing"), {"year": 2023, "month": 1}),
+        ]
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert probes == [True, False, False]
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 0
 
 
 def test_incremental_delete_insert(spark, tmp_path):
