@@ -506,38 +506,19 @@ def _eval_gram_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct 8-gram table of the held-out eval docs (doc_id % 20 ==
     7 — same convention as dedup_decontamination): the persisted
     artifact a production gate would load, cached by
-    ``session_artifact``; gram construction is the exact expression the
-    batch audit compiles."""
+    ``session_artifact``; grams come from ``operators.text.gram_rows``,
+    as in the batch audit and the gate."""
     return session_artifact(spark, sf_dir, "eval_grams", _build_eval_gram_index)
 
 
 def _build_eval_gram_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
-    from ..operators.text import tokens
+    from ..operators.text import gram_rows
     from ..sources.testdata import load_table
 
-    n = 8
-    toks = F.col("_toks")
-    grams = F.when(
-        F.size(toks) >= n,
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(0), F.size(toks) - n),
-                lambda i: F.concat_ws(
-                    " ", *[F.element_at(toks, i + j + 1) for j in range(n)]
-                ),
-            )
-        ),
-    ).otherwise(F.array().cast("array<string>"))
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") % 20 == 7)
-    return (
-        docs.select(tokens("text").alias("_toks"))
-        .select(grams.alias("grams"))
-        .select(F.explode("grams").alias("gram"))
-        .distinct()
-        .localCheckpoint()
-    )
+    return gram_rows(docs, "text", 8, []).distinct().localCheckpoint()
 
 
 def _grams8_sql_stream() -> str:

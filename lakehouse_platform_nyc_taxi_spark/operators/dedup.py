@@ -37,7 +37,7 @@ from pyspark.sql import functions as F
 
 from ..functions.trino import trino_round
 from .hashing import affine_long, md5_long
-from .text import tokens
+from .text import gram_rows, tokens, word_ngrams
 
 
 def exact_dedup(
@@ -289,7 +289,6 @@ def minhash_lsh_pairs(
     shingle_size: int = 5,
     bands: int = 4,
     min_jaccard_est: float = 0.5,
-    materialize_signatures: bool = True,
     banded: DataFrame | None = None,
 ) -> DataFrame:
     """MinHash+LSH near-duplicate candidate pairs with estimated Jaccard.
@@ -298,13 +297,6 @@ def minhash_lsh_pairs(
     distinct candidate pairs -> signature-agreement estimate, keeping
     pairs with est >= ``min_jaccard_est``. The band join is the scale
     path: candidates only ever meet inside a band bucket.
-
-    ``materialize_signatures`` (default on) localCheckpoints the
-    signature table (tiny: num_hashes longs per doc) before the
-    self-join, which would otherwise recompute the whole shingle/md5
-    pipeline for each side — measured 2.2x at sf0.1. This makes the call
-    eager; pass False for a fully lazy plan. In production the signature
-    table is typically written out once and reused across runs anyway.
 
     ``banded``: a precomputed ``band_table`` output (id, band,
     band_digest, sig0..sigN-1) to join against instead of re-deriving
@@ -319,9 +311,14 @@ def minhash_lsh_pairs(
             "banding and reduce candidate recall"
         )
     if banded is None:
-        sigs = minhash_signatures(df, text_col, id_col, num_hashes, shingle_size)
-        if materialize_signatures:
-            sigs = sigs.localCheckpoint()
+        # localCheckpoint the signature table (tiny: num_hashes longs per
+        # doc): the self-join would otherwise recompute the whole
+        # shingle/md5 pipeline for each side — measured 2.2x at sf0.1.
+        # It makes the call eager; in production the signature table is
+        # written out once and reused across runs anyway.
+        sigs = minhash_signatures(
+            df, text_col, id_col, num_hashes, shingle_size
+        ).localCheckpoint()
 
         banded = band_table(sigs, id_col, num_hashes, bands)
 
@@ -502,45 +499,26 @@ def _gram_intersections(
 ):
     """Shared inverted-index core: (doc_a, doc_b, sz_a, sz_b, n_shared)
     for every within-block pair sharing ≥ 1 distinct word-n-gram."""
-    toks = F.col("_toks")
-    grams = F.when(
-        F.size(toks) >= ngram,
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(0), F.size(toks) - ngram),
-                # element_at is O(1) per gram on the materialized token
-                # array; slice() would copy O(n) per position (O(L²)/doc)
-                lambda i: F.concat_ws(
-                    " ", *[F.element_at(toks, i + k + 1) for k in range(ngram)]
-                ),
-            )
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    # Materialize tokens and the gram array in their own projections before
-    # exploding. Collapsing size(grams)+explode(grams) into one select makes
-    # Catalyst place the size() in a Project *above* the Generate,
-    # re-deriving the whole array from `text` once per exploded row (~50x
-    # blowup measured); likewise the regex split must stay out of the
-    # per-gram lambda or it re-runs once per sequence element.
-    # explode_outer (not explode): InferFiltersFromGenerate would add
-    # size(grams)>0 under an inner explode, and predicate pushdown inlines
-    # the whole gram pipeline into a per-row scan filter (~6x measured);
-    # the rule skips outer generates, and the inner equi-join on `gram`
-    # drops the null rows an empty array produces.
+    # gram_rows' projection discipline (see there), with its own explode
+    # so sz is computed beside it from the already-projected gram array;
+    # the inner equi-join on `gram` drops the null rows explode_outer
+    # gives an empty array.
     base = (
         df.select(
             F.col(id_col),
             F.col(block_col).alias("block"),
             tokens(text_col).alias("_toks"),
         )
-        .select(F.col(id_col), "block", grams.alias("grams"))
+        .select(
+            F.col(id_col), "block", word_ngrams(F.col("_toks"), ngram).alias("grams")
+        )
         .select(
             F.col(id_col),
             "block",
             # coalesce makes sz statically non-nullable: otherwise the
             # null-intolerant prune predicate lets constraint propagation
             # infer isnotnull(sz) and push it to the scan with the whole
-            # gram pipeline inlined (same blowup as above via another rule)
+            # gram pipeline inlined (gram_rows' blowup via another rule)
             F.coalesce(F.size("grams"), F.lit(-1)).alias("sz"),
             F.explode_outer("grams").alias("gram"),
         )
@@ -678,14 +656,11 @@ def _window_table(
     """Shared (id, pos, wh) window-hash table for the substring-dedup
     family: one md5 per k-token window, 1-based positions, df-capped.
 
-    Same projection discipline as ``_gram_intersections``: tokens and
-    the hash array materialize in their own selects (fusing them makes
-    Catalyst re-derive the array per exploded row), and posexplode_outer
-    (not posexplode) keeps InferFiltersFromGenerate from pushing the
-    whole pipeline into a per-row scan filter; the inner equi-join on wh
-    drops the null rows empty arrays produce. element_at is O(1) per
-    token on the materialized array; slice() would copy k elements per
-    position.
+    Same projection discipline as :func:`~.text.gram_rows` (see there
+    for why), with posexplode_outer for the positions; the inner
+    equi-join on wh drops the null rows empty arrays produce.
+    element_at is O(1) per token on the materialized array; slice()
+    would copy k elements per position.
     """
     k = window_tokens
     if k < 2:
@@ -1194,34 +1169,20 @@ def gram_sets(
     text_col: str = "text",
     id_col: str = "doc_id",
     ngram: int = 3,
-    hashed: bool = False,
 ) -> DataFrame:
-    """Distinct word-n-gram set per document, as an array column —
-    the same gram definition the inverted-index Jaccard core uses
-    (whitespace tokens, ``ngram``-word windows, de-duplicated), but
-    kept per-doc instead of exploded, for per-PAIR exact re-checks.
+    """Distinct word-n-gram set per document (:func:`~.text.word_ngrams`),
+    md5-hashed to 8-byte longs, as an array column — kept per-doc
+    instead of exploded, for per-PAIR exact re-checks.
 
-    ``hashed=True`` md5-hashes every gram to an 8-byte long: set
+    Hashed because the sets ride a candidate-pair join: set
     intersections compare longs instead of ~30-byte strings and the
-    arrays shrink ~4x through any join — the right representation when
-    the gram sets ride a candidate-pair join. A 48-bit collision only
-    matters if two distinct grams of the SAME doc pair collide
-    (~10^-14 per pair); an engine-parity twin applies the identical
-    hash, so cross-engine results agree even then."""
-    toks = F.col("_toks")
-    grams = F.when(
-        F.size(toks) >= ngram,
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(0), F.size(toks) - ngram),
-                lambda i: F.concat_ws(
-                    " ", *[F.element_at(toks, i + k + 1) for k in range(ngram)]
-                ),
-            )
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    if hashed:
-        grams = F.array_distinct(F.transform(grams, md5_long))
+    arrays shrink ~4x. A 48-bit collision only matters if two distinct
+    grams of the SAME doc pair collide (~10^-14 per pair); an
+    engine-parity twin applies the identical hash, so cross-engine
+    results agree even then."""
+    grams = F.array_distinct(
+        F.transform(word_ngrams(F.col("_toks"), ngram), md5_long)
+    )
     return df.select(F.col(id_col), tokens(text_col).alias("_toks")).select(
         F.col(id_col), grams.alias("grams")
     )
@@ -1277,7 +1238,7 @@ def lsh_precision(
     # the bands already pruned to near-linear size. Union size is
     # derived (|A|+|B|-|A∩B|, exact on distinct sets) instead of
     # materializing concat+distinct per pair.
-    g = gram_sets(df, text_col, id_col, ngram, hashed=True)
+    g = gram_sets(df, text_col, id_col, ngram)
     a = g.select(F.col(id_col).alias("doc_a"), F.col("grams").alias("_ga"))
     b = g.select(F.col(id_col).alias("doc_b"), F.col("grams").alias("_gb"))
     # Two-step projection so the O(|ga|+|gb|) intersect runs ONCE per
@@ -1334,39 +1295,14 @@ def decontamination_report(
     single expand-aggregate over that shuffle. Cost is linear in
     corpus grams: no posting-list self-join, no df cap needed, no
     second tokenize pass (the build-eval-set-then-join formulation
-    scans the corpus twice). Gram construction is byte-identical
-    to :func:`gram_sets` (whitespace tokens, de-duplicated windows),
-    with the same anti-inline projection discipline (see
-    ``_gram_intersections``: size() and the token split must
-    materialize below the explode or Catalyst re-derives the gram
-    pipeline per exploded row).
+    scans the corpus twice). Grams come from :func:`~.text.gram_rows`.
 
     Output (one row): ``n_eval, n_train, n_eval_grams,
     n_contaminated, n_flagged_grams, contamination_rate`` —
     rate = contaminated / train, round6.
     """
-    toks = F.col("_toks")
-    grams = F.when(
-        F.size(toks) >= ngram,
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(0), F.size(toks) - ngram),
-                lambda i: F.concat_ws(
-                    " ", *[F.element_at(toks, i + k + 1) for k in range(ngram)]
-                ),
-            )
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    from .text import tokens
-
-    ex = (
-        df.select(
-            F.col(id_col),
-            eval_pred.cast("boolean").alias("_ev"),
-            tokens(text_col).alias("_toks"),
-        )
-        .select(F.col(id_col), "_ev", grams.alias("grams"))
-        .select(F.col(id_col), "_ev", F.explode_outer("grams").alias("gram"))
+    ex = gram_rows(
+        df, text_col, ngram, [id_col, eval_pred.cast("boolean").alias("_ev")]
     )
     # "gram appears in some eval doc" is a max() window over the gram
     # partition — the distinct-eval-gram table and the train-side join
@@ -1377,7 +1313,7 @@ def decontamination_report(
     hasev = (
         F.max(F.col("_ev").cast("int")).over(Window.partitionBy("gram")) == 1
     )
-    marked = ex.withColumn("_hasev", hasev).filter(F.col("gram").isNotNull())
+    marked = ex.withColumn("_hasev", hasev)
     hit = ~F.col("_ev") & F.col("_hasev")
     stats = marked.agg(
         F.countDistinct(F.when(F.col("_ev"), F.col("gram"))).alias(
@@ -1427,49 +1363,21 @@ def gram_novelty(
     explode is tokenized once, shuffled once, and never joined back
     (the groupBy+join formulation computes the explode twice; measured
     15.6 s -> window form at sf0.1). The per-(doc, group) ratio then
-    rolls up to |groups| rows. Never a doc x doc comparison; gram
-    construction is byte-identical to :func:`gram_sets`, including the
-    anti-inline projection discipline (see ``_gram_intersections``).
-    Documents shorter than ``ngram`` tokens carry no grams and are
-    excluded (documented; they have no novelty to measure).
+    rolls up to |groups| rows. Never a doc x doc comparison; grams
+    come from :func:`~.text.gram_rows`. Documents shorter than
+    ``ngram`` tokens carry no grams and are excluded (documented; they
+    have no novelty to measure).
 
     Output per group: ``{group_col}, n_docs, n_grams, n_novel,
     novelty_rate`` (gram counts are per-doc distinct, summed;
     rate = novel / grams, round6).
     """
-    from .text import tokens
-
-    toks = F.col("_toks")
-    grams = F.when(
-        F.size(toks) >= ngram,
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(0), F.size(toks) - ngram),
-                lambda i: F.concat_ws(
-                    " ", *[F.element_at(toks, i + k + 1) for k in range(ngram)]
-                ),
-            )
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    ex = (
-        df.select(
-            F.col(id_col),
-            F.col(group_col),
-            tokens(text_col).alias("_toks"),
-        )
-        .select(F.col(id_col), F.col(group_col), grams.alias("grams"))
-        .select(
-            F.col(id_col),
-            F.col(group_col),
-            F.explode_outer("grams").alias("gram"),
-        )
-    )
+    ex = gram_rows(df, text_col, ngram, [id_col, group_col])
     # min-over-gram-partition window == groupBy(gram).min + join back,
     # but tokenizes and shuffles the exploded table exactly once
     first = F.min(id_col).over(Window.partitionBy("gram"))
     per_doc = (
         ex.withColumn("_first", first)
-        .filter(F.col("gram").isNotNull())
         .groupBy(F.col(id_col), F.col(group_col))
         .agg(
             F.count(F.lit(1)).alias("_ng"),

@@ -71,12 +71,6 @@ class Model:
     #: CHECK constraints installed when a ``snapshot`` model first
     #: materializes; every later increment is validated against them
     constraints: dict[str, str] | None = None
-    #: Inline DQ expectations (name -> boolean VIOLATION SQL expr) for
-    #: ``table`` models: counted DURING the materializing write via
-    #: Dataset.observe (zero extra scans) and reported in
-    #: ``PipelineResult.dq_counts`` — the dbt-test counts without the
-    #: post-hoc rescan (the 37-check suite stays for everything else)
-    expectations: dict[str, str] | None = None
 
 
 @dataclass
@@ -84,8 +78,6 @@ class PipelineResult:
     built: dict[str, DataFrame] = field(default_factory=dict)
     timings: dict[str, float] = field(default_factory=dict)
     errors: dict[str, str] = field(default_factory=dict)
-    #: per-model inline expectation counts (observe-based, table models)
-    dq_counts: dict[str, dict[str, int]] = field(default_factory=dict)
 
     @property
     def ok(self) -> bool:
@@ -138,20 +130,7 @@ def taxi_models(snapshot_staging: Sequence[str] = ()) -> list[Model]:
         ),
         Model("int_trips_enriched", ["int_trips_unified"], int_trips_enriched),
         Model("int_trips_cleaned", ["int_trips_enriched"], int_trips_cleaned),
-        Model(
-            "fct_trips",
-            ["int_trips_cleaned"],
-            fct_trips,
-            materialized="table",
-            # the load-bearing dbt not_null tests (marts/schema.yml:9-15)
-            # as inline observe-counters — tracked during the write, the
-            # post-hoc 37-check suite still runs them authoritatively
-            expectations={
-                "trip_id_null": "trip_id IS NULL",
-                "pickup_datetime_null": "pickup_datetime IS NULL",
-                "taxi_type_null": "taxi_type IS NULL",
-            },
-        ),
+        Model("fct_trips", ["int_trips_cleaned"], fct_trips, materialized="table"),
         Model("fct_trips_daily", ["fct_trips"], fct_trips_daily, materialized="table"),
         Model("fct_trips_monthly", ["fct_trips"], fct_trips_monthly, materialized="table"),
     ]
@@ -248,20 +227,7 @@ def run_pipeline(
                         )
                     ctx[model.name] = snap.read_table(spark, path)
                 elif model.materialized == "table":
-                    if model.expectations:
-                        from .quality.observers import observed_write
-
-                        result.dq_counts[model.name] = observed_write(
-                            df,
-                            path,
-                            {
-                                n: F.expr(e)
-                                for n, e in model.expectations.items()
-                            },
-                            partition_by=list(model.partition_by) or None,
-                        )
-                    else:
-                        overwrite_table(df, path, model.partition_by or None)
+                    overwrite_table(df, path, model.partition_by or None)
                     ctx[model.name] = read_back(df, path)
                 else:  # view
                     ctx[model.name] = df

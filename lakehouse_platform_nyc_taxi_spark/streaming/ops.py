@@ -652,34 +652,13 @@ def stream_decontamination_gate(
     so dedup state for grams older than the watermark horizon is
     evicted instead of growing without bound; re-deliveries later
     than the horizon re-emit (at-least-once, the standard watermarked
-    trade). Gram construction is byte-identical to the batch side
-    (operators/dedup.py::decontamination_report).
+    trade). Grams come from ``operators.text.gram_rows``, as on the batch
+    side (``operators.dedup.decontamination_report``).
     """
-    from ..operators.text import tokens
+    from ..operators.text import gram_rows
 
-    toks = F.col("_toks")
-    grams = F.when(
-        F.size(toks) >= ngram,
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(0), F.size(toks) - ngram),
-                lambda i: F.concat_ws(
-                    " ", *[F.element_at(toks, i + k + 1) for k in range(ngram)]
-                ),
-            )
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    keep = [F.col(event_time)] if event_time else []
-    ex = (
-        stream_docs.select(F.col("doc_id"), tokens("text").alias("_toks"), *keep)
-        .select(F.col("doc_id"), grams.alias("grams"), *keep)
-        # explode_outer, not explode: InferFiltersFromGenerate would add
-        # size(grams) > 0 under an inner explode and predicate pushdown
-        # inlines the entire gram pipeline into a per-row scan filter
-        # (the _gram_intersections blowup — measured 29 s vs ~2 s here);
-        # the inner equi-join on `gram` drops the null rows anyway
-        .select(F.col("doc_id"), F.explode_outer("grams").alias("gram"), *keep)
-    )
+    keep = ["doc_id", event_time] if event_time else ["doc_id"]
+    ex = gram_rows(stream_docs, "text", ngram, keep)
     flagged = ex.join(eval_grams.select("gram"), "gram")
     if event_time:
         return (

@@ -103,6 +103,31 @@ def test_no_expensive_expression_inlined_into_scan_filters(spark):
                 )
 
 
+GRAM_QUERIES = (
+    "dedup_ngram_jaccard", "dedup_clusters", "dedup_cluster_containment",
+    "dedup_ngram_containment", "dedup_cluster_survivors", "dedup_decontamination",
+    "sampling_fold_leakage", "text_gram_novelty", "dedup_lsh_precision",
+    "dedup_cluster_purge", "text_decontamination", "corpus_overlap_matrix",
+    "corpus_novelty",
+)
+
+
+@pytest.mark.parametrize("name", GRAM_QUERIES)
+def test_gram_lambdas_never_split_text(spark, name):
+    """Word n-grams are built from a projected token column: no regex
+    split may run inside a higher-order-function lambda, once per gram
+    window instead of once per document."""
+    plan = optimized_of(spark, name)
+    for m in re.finditer(r"lambdafunction\(", plan):
+        depth = 0
+        for end in range(m.end() - 1, len(plan)):  # to the matching ")"
+            depth += {"(": 1, ")": -1}.get(plan[end], 0)
+            if depth == 0:
+                break
+        body = plan[m.start():end]
+        assert "split(" not in body, f"{name}: split inside a lambda:\n{body[:300]}"
+
+
 def test_whole_stage_codegen_covers_scan_queries(spark):
     # text_stats moved out of this list: its scan-parallelize repartition
     # puts an AQE boundary above the scan, and pre-execution AdaptiveSparkPlan

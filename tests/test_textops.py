@@ -15,10 +15,12 @@ from lakehouse_platform_nyc_taxi_spark.operators.sessionize import sessionize
 from lakehouse_platform_nyc_taxi_spark.operators import text
 from lakehouse_platform_nyc_taxi_spark.operators.text import (
     decontaminate,
+    gram_rows,
     heavy_hitters,
     repetition_stats,
-    shingles,
     tfidf_topk,
+    tokens,
+    word_ngrams,
 )
 
 
@@ -47,13 +49,34 @@ def test_repetition_stats_degenerate_vs_diverse(spark):
 
 
 def test_shingles_distinct_and_short_doc_guard(spark):
-    df = _docs(spark, [(1, "a b c d e"), (2, "x y")])
+    df = _docs(
+        spark,
+        [
+            (1, "a b c d e"),
+            (2, "x y"),
+            (3, "  p \t q   r\n s  "),  # whitespace runs, leading and trailing
+            (4, "a b c a b c a b"),  # repeated grams
+            (5, "u v w"),  # exactly n tokens
+        ],
+    )
     out = {
         r["doc_id"]: r["g"]
-        for r in df.select("doc_id", shingles("text", 3).alias("g")).collect()
+        for r in df.select("doc_id", tokens("text").alias("_toks"))
+        .select("doc_id", word_ngrams(F.col("_toks"), 3).alias("g"))
+        .collect()
     }
     assert out[1] == ["a b c", "b c d", "c d e"]
     assert out[2] == []  # shorter than n -> empty, not [1, 0]-style garbage
+    assert out[3] == ["p q r", "q r s"]
+    assert out[4] == ["a b c", "b c a", "c a b"]  # distinct, first-occurrence order
+    assert out[5] == ["u v w"]
+    # gram_rows is the same grams exploded; doc 2 yields no row, not a
+    # NULL-gram row
+    rows = gram_rows(df, "text", 3, ["doc_id", F.col("doc_id").alias("d")])
+    assert rows.columns == ["doc_id", "d", "gram"]
+    assert sorted((r["doc_id"], r["d"], r["gram"]) for r in rows.collect()) == sorted(
+        (i, i, g) for i, gs in out.items() for g in gs
+    )
 
 
 def test_decontaminate_flags_overlap(spark):
