@@ -9,14 +9,26 @@ extension operators) to a named query with two faces:
 
 ``__spark_entry__.queries()`` / ``oracle_sql()`` are thin views over this
 registry.
+
+The driver value-checks only the first 50 names ``registry()`` yields
+and records each round in ``CORRECTNESS_r<N>.json`` at the repo root.
+``registry()`` therefore orders names by their latest green round in
+those files, oldest first (a name never green counts as round 0), with
+ties in registration order. Checking in a round's file moves the
+queries it covered to the tail, so each round's window is the queries
+the driver has gone longest without checking. Every registered query
+is also value-checked on every change by
+``tests/test_harness_oracle.py``.
 """
 
 from __future__ import annotations
 
 import dataclasses
+import json
 import os
 from collections.abc import Callable
 from dataclasses import dataclass
+from pathlib import Path
 
 from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
@@ -116,348 +128,20 @@ def register(
     return deco
 
 
-# Driver-facing registration order. The driver's correctness pass checks
-# only the FIRST 50 registered queries (CORRECTNESS_r01 covered the first
-# 50; the 14 similarity/text/streaming/multimodal queries registered last
-# got no row). We therefore order explicitly, rotating coverage across
-# rounds:
-#   1. _PRIORITY — queries with no driver correctness row yet (r01's
-#      unverified tail, plus anything whose oracle changed this round).
-#   2. Any name not listed here (new this round -> unverified -> early).
-#   3. _KEEP — previously-green queries, most load-bearing first.
-#   4. _ROTATE_OUT — previously-green, redundant-variant queries with
-#      independent pytest coverage; these fall past the 50-row window.
-#      Their green rows live in CORRECTNESS_r01.json (kept in-repo), so
-#      rounds jointly cover every query.
-_PRIORITY = [
-    # --- Round-18 window (driver checks the FIRST 50 registered) ---
-    # INVARIANT (pinned by tests/test_harness_oracle.py): len(_PRIORITY)
-    # is EXACTLY 50 and equals the first 50 names registry() yields. A
-    # query added mid-round must be inserted at the head of this list
-    # and the tail name moved to the head of _KEEP (1-in-1-out).
-    #
-    # Composition (VERDICT r17 #1): the ENTIRE r12 cohort — exactly the
-    # 50 names whose latest driver attestation is r12, which hit the
-    # 6-round freshness horizon this round. The window is SATURATED with
-    # ZERO slack (50 forced rotations = 50 slots), so r18 is an
-    # attestation-only round: no r13+-attested query body changes, no
-    # new registrations (TPC-DS growth and the streaming audio gate
-    # stay deferred to r19/r20 per SCALE.md "Attestation-window
-    # saturation", where the r13 (49) and r14 (48) cohorts leave 1-2
-    # spare slots). List order = prior _KEEP staleness order.
-    "events_longest_streak",
-    "events_attribution_time_decay",
-    "stats_cuped_adjustment",
-    "privacy_l_diversity",
-    "orders_pareto_share",
-    "events_anomaly_mad",
-    "basket_association_rules",
-    "tpch_q2_min_cost_supplier",
-    "tpch_q9_product_type_profit",
-    "tpch_q11_important_stock",
-    "tpch_q16_supplier_part_relation",
-    "tpch_q20_potential_promotion",
-    "tpch_q12_shipping_delay",
-    "scd2_event_history",
-    "window_ntile_cume",
-    "doc_chunking",
-    "text_winnowing",
-    "sampling_per_group_cap",
-    "sampling_hash_split",
-    "text_fingerprints",
-    "text_language_id",
-    "dq_violation_counts",
-    "datetime_features",
-    "multimodal_metadata",
-    "text_bigram_lm",
-    "privacy_k_anonymity",
-    "sql_running_distinct",
-    "agg_pricing_summary",
-    "similarity_topk_int8",
-    "streaming_windowed_rollup",
-    "streaming_session_windows",
-    "streaming_stream_static_join",
-    "streaming_stateful_user_stats",
-    "text_repetition",
-    "text_rarity_stats",
-    "cast_rename_projection",
-    "join_full_outer",
-    "filter_precedence_quirk",
-    "in_list_between",
-    "incremental_watermark",
-    "join_right_outer",
-    "lateral_explode_tokens",
-    "orderby_limit_topk",
-    "pivot_event_values",
-    "scan_projection_filter",
-    "set_except",
-    "set_intersect",
-    "star_extend_projection",
-    "union_all_typed_nulls",
-    "union_distinct",
-]
-# Any NEW registration not listed anywhere auto-slots directly after
-# _PRIORITY — but with _PRIORITY at exactly 50 that lands OUTSIDE the
-# window, so a query added mid-round must be listed in _PRIORITY
-# explicitly (and a name bumped to _KEEP to make room).
-_KEEP = [
-    # Staleness-ordered (oldest driver row first): the r13 cohort (49),
-    # then r14 (48), r15 (50), r16 (46), and the r17-attested former
-    # window (50) at the tail — future rotations pull from the HEAD of
-    # this list. Slot plan (r18 revision — the helper-closure audit
-    # proved fake_resize/fake_frame_sample byte-identical since r13, so
-    # frame_sample/resize_thumbnail need no early slot; see
-    # tools/rotation_deferrals.json + SCALE.md "Round-18"): r19 = the
-    # 49-name r13 cohort + multimodal_phash_neardup (deferred, takes the
-    # single spare). r20 = the 48-name r14 cohort + dedup_phash_clusters
-    # (deferred) + the NEW streaming_audio_gate (activation note in
-    # harness/streaming.py). Derive each round's window with
-    # tools/rotate_window.py.
-    "timeseries_holt_forecast",
-    "similarity_mmr_rerank",
-    "streaming_decontamination_gate",
-    "tpcds_q51_cumulative_join",
-    "tpcds_q67_rollup_topk",
-    "dedup_decontamination",
-    "sampling_fold_leakage",
-    "stats_mann_whitney",
-    "stats_bootstrap_ci",
-    "orders_cohort_ltv",
-    "text_gram_novelty",
-    "tpcds_q5_channel_rollup",
-    "tpcds_q38_period_intersect",
-    "tpcds_q47_yoy_ratio",
-    "sampling_reservoir_weighted",
-    "sampling_priority_estimate",
-    "dedup_cluster_containment",
-    "validity_filter",
-    "window_lead_lag",
-    "window_moving_avg",
-    "window_running_total",
-    "window_time_range_sum",
-    "window_topk_per_group",
-    "agg_cube",
-    "agg_grouping_sets",
-    "agg_rollup",
-    "agg_arg_extremes",
-    "agg_no_keys",
-    "agg_percentiles",
-    "join_anti",
-    "join_asof",
-    "join_cross_ratio",
-    "join_range",
-    "join_semi",
-    "join_null_safe",
-    "unpivot_charges",
-    "agg_approx_distinct",
-    "dedup_exact_substring",
-    "dedup_strip_spans",
-    "dedup_self_substring",
-    "multimodal_decode_image",
-    "streaming_grouping_sets",
-    "streaming_chained_windows",
-    "agg_hll_mergeable_rollup",
-    "entity_resolution_golden",
-    "basket_pair_histogram",
-    "embedding_quantize_int8",
-    "agg_collect_sorted",
-    "timeseries_gapfill_15min",
-    "stats_lift_gain",
-    "tpcds_q97_overlap",
-    "stats_brier_decomposition",
-    "timeseries_holt_winters",
-    "tpcds_q69_exists_gate",
-    "tpcds_q88_time_bands",
-    "stats_ece_calibration",
-    "stats_conformal_coverage",
-    "graph_link_prediction",
-    "events_rfm_segmentation",
-    "text_zipf_fit",
-    "timeseries_gapfill",
-    "sampling_temperature_mix",
-    "conditional_case_nullif",
-    "dedup_exact",
-    "dedup_minhash_lsh_pairs",
-    "text_pii_scrub",
-    "dedup_clusters",
-    "corpus_curation",
-    "sequence_packing",
-    "multimodal_features",
-    "agg_monthly_rollup",
-    "agg_percentiles_approx",
-    "embedding_dim_stats",
-    "text_stats",
-    "text_corpus_rollup",
-    "text_tfidf_topk",
-    "similarity_topk_bruteforce",
-    "similarity_topk_lsh",
-    "similarity_topk_ivf",
-    "dedup_embedding_cosine",
-    "sql_adhoc_interactive",
-    "dedup_minhash_signatures",
-    "dedup_simhash",
-    "dedup_ngram_jaccard",
-    "sampling_stratified_resample",
-    "sessionize_events",
-    "text_decontamination",
-    "text_heavy_hitters",
-    "join_broadcast_dims",
-    "join_left_outer",
-    "embedding_covariance",
-    "text_collocations",
-    "sampling_weighted",
-    "text_bm25_topk",
-    "text_lm_surprisal",
-    "embedding_random_projection",
-    "hybrid_search_rrf",
-    "streaming_attributed_rollup",
-    "stats_psi_drift",
-    "stats_cvm_two_sample",
-    "stats_pr_curve",
-    "streaming_conformal_gate",
-    "timeseries_backtest_accuracy",
-    "timeseries_ewma_chart",
-    "tpcds_q36_lochierarchy",
-    "graph_hits",
-    "layout_bloom_skipping",
-    "events_kaplan_meier",
-    "events_sequence_mining",
-    "stats_spearman_corr",
-    "stats_isotonic_calibration",
-    "stats_ols_two_features",
-    "orders_gini",
-    "events_ips_offpolicy",
-    "profile_benford",
-    "profile_fd_violations",
-    "embedding_outlier_scores",
-    "stats_wilson_intervals",
-    "stats_skew_kurtosis",
-    "stats_tost_equivalence",
-    "sampling_neyman_allocation",
-    "timeseries_acf",
-    "text_rake_keywords",
-    "quality_gopher_rules",
-    "corpus_overlap_matrix",
-    "embedding_kmeans_semdedup",
-    "dedup_cluster_survivors",
-    "similarity_pq_adc_topk",
-    "similarity_pq_recall",
-    "dedup_lsh_precision",
-    "embedding_source_drift",
-    "sampling_bernoulli_estimate",
-    "profile_key_skew",
-    "similarity_hard_negatives",
-    "corpus_novelty",
-    "events_winsorize",
-    "streaming_dedup_gate",
-    "tpch_q3_shipping_priority",
-    "tpch_q5_local_supplier_volume",
-    "tpch_q10_returned_items",
-    "layout_zorder_skipping",
-    "dedup_incremental_minhash",
-    "graph_label_propagation",
-    "layout_hilbert_skipping",
-    "similarity_ivf_recall",
-    "multimodal_frame_sample",
-    "agg_approx_top_k_rollup",
-    "agg_weighted_median",
-    "agg_corr_regression",
-    "table_profile_numeric",
-    "stats_ks_two_sample",
-    "stats_roc_auc",
-    "multimodal_phash_neardup",
-    "dedup_simhash_neardup",
-    "quality_c4_rules",
-    "events_session_entropy",
-    "stats_brown_forsythe",
-    "graph_adamic_adar",
-    "text_vocab_coverage",
-    "tpcds_q73_frequent_buyers",
-    "tpcds_q93_returns_adjusted",
-    "stats_cochran_armitage",
-    "orders_herfindahl",
-    "events_nelson_aalen",
-    "dedup_phash_clusters",
-    "stats_anova_oneway",
-    "stats_kruskal_wallis",
-    "multimodal_resize_thumbnail",
-    "agg_kll_quantile_rollup",
-    "agg_theta_set_ops",
-    "agg_histogram_percentile_rollup",
-    "streaming_stream_stream_join",
-    "streaming_stream_stream_left",
-    "sql_recursive_chain",
-    "dedup_ngram_containment",
-    "agg_histogram",
-    "sql_correlated_subquery",
-    "cohort_retention",
-    "timeseries_anomaly",
-    "streaming_dedup_counts",
-    "graph_pagerank",
-    "fuzzy_join_suppliers",
-    "events_max_concurrency",
-    "timeseries_ohlc",
-    "sql_lateral_topn",
-    "dedup_latest_record",
-    "sampling_token_budget",
-    "scd2_point_in_time_join",
-    "json_extract_rollup",
-    "json_variant_histogram",
-    "window_rank_trio",
-    "window_nth_value_session",
-    "text_langid_confusion",
-    "timeseries_ljung_box",
-    "incremental_delete_insert",
-    "multimodal_audio_features",
-    "streaming_phash_gate",
-    "dedup_audio_neardup",
-    "quality_rule_ablation",
-    "events_dau_wau_stickiness",
-    "text_tokenizer_fertility",
-    "orders_interarrival_stats",
-    "privacy_t_closeness",
-    "events_funnel_latency",
-    "sql_having_above_average",
-    "text_log_odds_terms",
-    "embedding_standardize",
-    "corpus_kl_to_global",
-    "dedup_cluster_purge",
-    "events_attribution_last_touch",
-    "timeseries_cusum_changepoint",
-    "events_markov_transitions",
-    "stats_chi_squared",
-    "stats_ab_lift",
-    "streaming_cms_heavy_hitters",
-    "agg_count_min_sketch",
-    "sampling_dsir_weights",
-    "sampling_dsir_select",
-    "corpus_mixture_plan",
-    "tpch_q4_order_priority",
-    "tpch_q21_suppliers_who_kept_waiting",
-    "tpch_q6_forecast_revenue",
-    "tpch_q7_volume_shipping",
-    "tpch_q8_market_share",
-    "tpch_q13_customer_distribution",
-    "tpch_q14_promo_effect",
-    "tpch_q15_top_supplier",
-    "tpch_q17_small_quantity_revenue",
-    "tpch_q18_large_volume_customer",
-    "tpch_q19_discounted_revenue",
-    "tpch_q22_global_sales_opportunity",
-    "set_except_all",
-    "graph_triangle_count",
-    "graph_degree_stats",
-    "timeseries_twap",
-    "surrogate_keys_md5",
-    "similarity_topk_ivf_batch",
-    "similarity_topk_batch",
-    "agg_mode_median",
-    "join_skew_salted",
-    "events_funnel",
-    "table_profile_categorical",
-    "agg_daily_rollup",
-]
-_ROTATE_OUT: list[str] = []
+#: Where the driver's ``CORRECTNESS_r<N>.json`` files are checked in.
+HISTORY_DIR = Path(__file__).resolve().parents[2]
+
+
+def latest_green_round() -> dict[str, int]:
+    """name -> latest round whose ``CORRECTNESS_r<N>.json`` row is green:
+    no ``err`` and ``rows_match`` not false."""
+    latest: dict[str, int] = {}
+    for path in HISTORY_DIR.glob("CORRECTNESS_r*.json"):
+        rnd = int(path.stem.removeprefix("CORRECTNESS_r"))
+        for name, row in json.loads(path.read_text()).items():
+            if row.get("err") is None and row.get("rows_match") is not False:
+                latest[name] = max(latest.get(name, 0), rnd)
+    return latest
 
 
 def registry() -> dict[str, QuerySpec]:
@@ -477,16 +161,8 @@ def registry() -> dict[str, QuerySpec]:
         tpch,
     )
 
-    listed = set(_PRIORITY) | set(_KEEP) | set(_ROTATE_OUT)
-    new = [n for n in _REGISTRY if n not in listed]
-    order = (
-        _PRIORITY
-        + new
-        + _KEEP
-        + _ROTATE_OUT
-    )
-    missing = [n for n in order if n not in _REGISTRY]
-    assert not missing, f"ordered names not registered: {missing}"
+    latest = latest_green_round()
+    order = sorted(_REGISTRY, key=lambda name: latest.get(name, 0))
     return {name: _REGISTRY[name] for name in order}
 
 

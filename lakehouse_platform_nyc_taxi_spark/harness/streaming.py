@@ -810,14 +810,11 @@ def streaming_phash_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------------------------------------------
 # Streaming AUDIO near-dup gate (VERDICT r17 #7) — built and tested in
-# r18, REGISTRATION DEFERRED TO r20: the attestation window has zero
-# spare slots before then (SCALE.md "Round-18" saturation arithmetic:
-# r19's single spare is committed to the multimodal_phash_neardup
-# deferral; r20 = the 48-name r14 cohort + dedup_phash_clusters + THIS).
-# To activate in r20: wrap `streaming_audio_gate` with
+# r18, not registered: the registry stays at 293 queries this round.
+# To activate: wrap `streaming_audio_gate` with
 # `register("streaming_audio_gate", _audio_gate_oracle(),
-# doc=STREAMING_AUDIO_GATE_DOC, prepare=_audio_gate_index)` and append
-# the name to harness/__init__._PRIORITY's tail (1-in-1-out).
+# doc=STREAMING_AUDIO_GATE_DOC, prepare=_audio_gate_index)`. A name
+# with no driver row sorts into the driver's window by itself.
 # --------------------------------------------------------------------------
 
 def _audio_gate_index(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -481,13 +481,12 @@ def adamic_adar(
 
     The backbone construction is duplicated from ``link_prediction``
     rather than shared, deliberately: that function's body is
-    oracle-attested and the rotation audit fingerprints bodies, so the
-    variants evolve independently. Every post-backbone structure is
-    k-bounded; a middle node z always has deg(z) >= 2 (it neighbors
-    both x and y), so ``ln(deg)`` never hits zero. Per-wedge terms are
-    round8 then decimal-summed (deterministic under any partitioning);
-    output ordered by (adamic_adar desc, node_a, node_b) — a
-    TakeOrdered, unique tiebreak.
+    oracle-attested, so the variants evolve independently. Every
+    post-backbone structure is k-bounded; a middle node z always has
+    deg(z) >= 2 (it neighbors both x and y), so ``ln(deg)`` never hits
+    zero. Per-wedge terms are round8 then decimal-summed (deterministic
+    under any partitioning); output ordered by (adamic_adar desc,
+    node_a, node_b) — a TakeOrdered, unique tiebreak.
     """
     from ..functions.trino import trino_round
 

@@ -4,6 +4,8 @@ the local mirror of the driver's correctness gate, at the driver's sf
 
 from __future__ import annotations
 
+import json
+
 import pytest
 
 from lakehouse_platform_nyc_taxi_spark import harness
@@ -59,20 +61,78 @@ def test_every_registered_query_in_coverage_md():
     assert not missing, f"queries absent from COVERAGE.md: {missing}"
 
 
-def test_driver_attestation_window_is_exactly_50():
-    """The driver's correctness pass attests only the FIRST 50 registered
-    queries. _PRIORITY must therefore be exactly 50 names and be exactly
-    the head of the registry ordering — a 51st entry silently falls out
-    of the window (ADVICE r10 #1: ``set_except_all`` lost its r10 row
-    this way)."""
-    names = list(harness.registry())
-    assert len(harness._PRIORITY) == 50, (
-        f"_PRIORITY has {len(harness._PRIORITY)} names; the driver window is 50"
+def _write_round(path, rnd, rows):
+    (path / f"CORRECTNESS_r{rnd:02d}.json").write_text(json.dumps(rows))
+
+
+def _registered():
+    """Registration order: the names in the order their modules ran."""
+    harness.registry()  # imports the query modules
+    return list(harness._REGISTRY)
+
+
+GREEN = {"rows_match": True, "err": None}
+
+
+@pytest.fixture
+def history(tmp_path, monkeypatch):
+    """An empty attestation history that registry() reads instead of the
+    repo's; tests add rounds with ``_write_round``."""
+    monkeypatch.setattr(harness, "HISTORY_DIR", tmp_path)
+    return tmp_path
+
+
+def test_registry_without_history_keeps_registration_order(history):
+    assert list(harness.registry()) == _registered()
+
+
+def test_registry_orders_by_latest_green_round(history):
+    a, b, c = _registered()[:3]
+    _write_round(history, 3, {a: GREEN, b: GREEN})
+    _write_round(history, 5, {a: GREEN})
+    _write_round(history, 4, {c: GREEN})
+    # every never-green name (round 0) comes first; then
+    # b (r3), c (r4), a (r5 beats its r3 row)
+    assert list(harness.registry())[-3:] == [b, c, a]
+
+
+def test_registry_ignores_failing_rows(history):
+    a, b, c = _registered()[:3]
+    _write_round(history, 2, {a: GREEN, b: GREEN, c: GREEN})
+    _write_round(
+        history,
+        7,
+        {
+            a: {"rows_match": None, "err": "no_oracle"},
+            b: {"rows_match": False, "err": None},
+            c: GREEN,
+        },
     )
-    assert names[:50] == harness._PRIORITY
-    # No duplicates anywhere in the ordering lists.
-    ordering = harness._PRIORITY + harness._KEEP + harness._ROTATE_OUT
-    assert len(ordering) == len(set(ordering))
+    assert harness.latest_green_round() == {a: 2, b: 2, c: 7}
+    assert list(harness.registry())[-3:] == [a, b, c]
+
+
+def test_registry_ties_keep_registration_order(history):
+    reg = _registered()
+    late = reg[::7]
+    _write_round(history, 9, {n: GREEN for n in late})
+    names = list(harness.registry())
+    assert names[-len(late):] == late
+    assert names[: -len(late)] == [n for n in reg if n not in late]
+
+
+def test_registry_yields_every_registered_name_once():
+    names = list(harness.registry())
+    assert len(names) == len(set(names))
+    assert set(names) == set(harness._REGISTRY)
+
+
+def test_driver_window_is_the_least_recently_attested():
+    """With the checked-in history, no query in the driver's window (the
+    first 50) was attested later than any query after it."""
+    latest = harness.latest_green_round()
+    rounds = [latest.get(n, 0) for n in harness.registry()]
+    assert max(rounds[:50]) <= min(rounds[50:])
 
 
 def test_approx_percentile_high_cardinality_error_bound(spark, duck_oracle):

@@ -5,9 +5,9 @@ column names, and order-insensitive values.
 Usage:
     python tools/check_oracles.py [name ...] [--sf-dir DIR] [--first N]
 
-With no names, checks the full registry in registration order (the same
-order the driver sees; its window is the first 50). ``--first N`` checks
-only the first N registered queries.
+With no names, checks the full registry in ``harness.registry()`` order
+(the order the driver sees; its window is the first 50). ``--first N``
+checks only the first N of that order.
 """
 
 from __future__ import annotations
