@@ -2,14 +2,22 @@
 
 Re-expresses dbt/models/marts/{fct_trips,fct_trips_daily,fct_trips_monthly}.sql.
 All aggregation is plain hash aggregation with map-side partial combine —
-Catalyst plans partial+final automatically; count(distinct) over two
-columns triggers Spark's expand+two-phase distinct plan, exactly what a
-100 TB run needs (no driver materialization anywhere).
+Catalyst plans partial+final automatically, with no driver
+materialization anywhere. The distinct counts are ``count_distinct``, the
+size of a ``collect_set``, not ``countDistinct``: over two or three
+columns Spark plans ``countDistinct`` as an ``Expand`` that copies every
+row once per distinct column plus once for the other aggregates, and a
+second aggregation stage, so each mart runs 2 jobs, not 3. Measured at
+taxi n = 200k (933k fct_trips rows, two incremental builds each): with
+``countDistinct`` the daily mart took 4.7-5.9 CPU s and 2.2 s wall and
+the monthly 3.8-5.2 CPU s and 1.6-1.9 s; with set sizes 2.9-3.3 and 1.2 s,
+and 3.2 and 0.9-1.1 s (there the marts also scan fct_trips as 4
+data-sized files instead of 12).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.trino import trino_round
@@ -49,6 +57,20 @@ FCT_TRIPS_COLUMNS = (
 )
 
 
+def count_distinct(col: str | Column) -> Column:
+    """``countDistinct(col)`` as ``size(collect_set(col))`` cast to bigint.
+
+    The two are equal: both ignore NULLs, give 0 for a group with no
+    non-NULL value, and are non-null bigint. But the set is an ordinary
+    aggregate buffer, so a query mixing it with other aggregates plans one
+    partial/final aggregate, where ``countDistinct`` plans an ``Expand``
+    and a second aggregation stage. The set holds one group's distinct
+    values, which these marts bound: location ids (265) and days of a
+    month.
+    """
+    return F.size(F.collect_set(col)).cast("long")
+
+
 def fct_trips(cleaned: DataFrame) -> DataFrame:
     """P9 column-subset projection, one row per high-quality trip."""
     return cleaned.select(*FCT_TRIPS_COLUMNS)
@@ -70,8 +92,8 @@ def fct_trips_daily(trips: DataFrame) -> DataFrame:
         )
         .agg(
             F.count("*").alias("total_trips"),
-            F.countDistinct("pickup_location_id").alias("unique_pickup_locations"),
-            F.countDistinct("dropoff_location_id").alias("unique_dropoff_locations"),
+            count_distinct("pickup_location_id").alias("unique_pickup_locations"),
+            count_distinct("dropoff_location_id").alias("unique_dropoff_locations"),
             trino_round(F.sum("trip_distance_miles"), 2).alias("total_distance_miles"),
             trino_round(F.avg("trip_distance_miles"), 2).alias("avg_distance_miles"),
             trino_round(F.min("trip_distance_miles"), 2).alias("min_distance_miles"),
@@ -104,9 +126,9 @@ def fct_trips_monthly(trips: DataFrame) -> DataFrame:
         trips.groupBy("year", "month", "taxi_type")
         .agg(
             F.count("*").alias("total_trips"),
-            F.countDistinct("pickup_location_id").alias("unique_pickup_locations"),
-            F.countDistinct("dropoff_location_id").alias("unique_dropoff_locations"),
-            F.countDistinct(F.to_date("pickup_datetime")).alias("days_with_trips"),
+            count_distinct("pickup_location_id").alias("unique_pickup_locations"),
+            count_distinct("dropoff_location_id").alias("unique_dropoff_locations"),
+            count_distinct(F.to_date("pickup_datetime")).alias("days_with_trips"),
             trino_round(F.sum("trip_distance_miles"), 2).alias("total_distance_miles"),
             trino_round(F.avg("trip_distance_miles"), 2).alias("avg_distance_miles"),
             trino_round(F.sum("trip_duration_minutes") / 60.0, 2).alias("total_duration_hours"),

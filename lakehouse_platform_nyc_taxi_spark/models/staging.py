@@ -15,7 +15,7 @@ from __future__ import annotations
 
 from collections.abc import Iterable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.trino import surrogate_key
@@ -161,15 +161,28 @@ def partition_watermark(
     return max(typed, key=nulls_first, default=None)
 
 
+def watermark_predicate(
+    watermark: tuple[int | None, int | None] | None,
+) -> Column | None:
+    """The rows at or after the ``(year, month)`` watermark, as a
+    predicate over ``year`` and ``month``; ``None`` (keep every row) when
+    there is no watermark or its year is NULL. A NULL month selects no
+    row of the watermark year (``month >= NULL``).
+
+    An incremental staging batch is the raw rows this predicate keeps, so
+    every partition the batch can touch is one the predicate selects: the
+    pipeline passes it to ``incremental_delete_insert`` as the delete
+    scope, which then needs no collect of the batch's partitions."""
+    if watermark is None or watermark[0] is None:
+        return None
+    year, month = watermark
+    return (F.col("year") > year) | ((F.col("year") == year) & (F.col("month") >= month))
+
+
 def watermark_filter(
     raw: DataFrame, watermark: tuple[int | None, int | None] | None
 ) -> DataFrame:
-    """Keep the rows at or after the ``(year, month)`` watermark; all of
-    ``raw`` when there is none or its year is NULL. A NULL month keeps
-    no row of the watermark year (``month >= NULL``)."""
-    if watermark is None or watermark[0] is None:
-        return raw
-    year, month = watermark
-    return raw.filter(
-        (F.col("year") > year) | ((F.col("year") == year) & (F.col("month") >= month))
-    )
+    """``raw`` filtered by ``watermark_predicate``; all of it when there is
+    no predicate."""
+    pred = watermark_predicate(watermark)
+    return raw if pred is None else raw.filter(pred)

@@ -18,14 +18,18 @@ facts the lake's layout or the runner already holds are not asked of
 Spark: an incremental staging model takes its watermark from the target's
 ``year=*/month=*`` partition directories (the parquet analogue of Hive or
 Iceberg partition metadata: one file-system listing instead of a read of
-the target plus a two-job aggregate), and every materialized output is
-read back with the schema of the DataFrame just written instead of
-inferring it from a parquet footer (one job each). An incremental staging
-model now runs 7 jobs instead of 11: the raw read's schema inference,
-``incremental_delete_insert``'s read of the target, its 2-job partition
-collect and its 3 write jobs. On the test fixture a full build runs 19
-jobs and an incremental re-run 35, instead of 26 and 54. Snapshot staging
-models keep the aggregate watermark over their table.
+the target plus a two-job aggregate), the watermark predicate that
+selects the batch also scopes ``incremental_delete_insert``'s delete
+(instead of a 2-job collect of the batch's partitions), the target is
+read with the batch's schema, and every materialized output is read back
+with the schema of the DataFrame just written instead of inferring it
+from a parquet footer (one job each). An incremental staging model runs
+4 jobs: the raw read's schema inference and its 3 write jobs. The marts
+count distinct values without an Expand, so each runs 2 jobs, and
+``fct_trips`` is written in data-sized tasks (one at fixture scale) that
+the marts then scan. On the test fixture a full build runs 17 jobs and
+an incremental re-run 21. Snapshot staging models keep the aggregate
+watermark over their table.
 """
 
 from __future__ import annotations
@@ -49,10 +53,11 @@ from .models import (
 from .models.staging import (
     incremental_watermark_filter,
     partition_watermark,
-    watermark_filter,
+    watermark_predicate,
 )
 from .sources.writers import (
     _path_exists,
+    data_sized,
     incremental_delete_insert,
     overwrite_table,
     partition_values,
@@ -185,16 +190,18 @@ def run_pipeline(
                         # partition directory: the parquet analogue of
                         # asking Hive or Iceberg partition metadata, with
                         # no read of the target and no aggregate job.
-                        # incremental_delete_insert is its only reader,
-                        # and with the schema-free read-back below the
-                        # model runs 7 jobs instead of 11.
-                        watermark = partition_watermark(
-                            partition_values(spark, path, ("year", "month"))
+                        # Its predicate both selects the batch from the raw
+                        # input and scopes the delete, so
+                        # incremental_delete_insert collects no partition
+                        # list (a 2-job distinct).
+                        scope = watermark_predicate(
+                            partition_watermark(partition_values(spark, path, ("year", "month")))
                         )
-                        if watermark is not None:
-                            df = model.fn(watermark_filter(inputs[0], watermark))
+                        if scope is not None:
+                            df = model.fn(inputs[0].filter(scope))
                         incremental_delete_insert(
-                            spark, df, path, model.unique_key, model.partition_by
+                            spark, df, path, model.unique_key, model.partition_by,
+                            delete_scope="partition" if scope is None else scope,
                         )
                     ctx[model.name] = read_back(df, path)
                 elif model.materialized == "snapshot":
@@ -227,7 +234,16 @@ def run_pipeline(
                         )
                     ctx[model.name] = snap.read_table(spark, path)
                 elif model.materialized == "table":
-                    overwrite_table(df, path, model.partition_by or None)
+                    # Written in data-sized tasks, not one per input split:
+                    # fct_trips scans one file per staging partition (12 at
+                    # the benchmark's scale, 8 on the test fixture) and was
+                    # written as that many tiny files; it is now 1 file,
+                    # which each mart and the quality suite then scan as 1
+                    # task. At taxi n = 200k (933k fct_trips rows) it is 4
+                    # tasks instead of 12: CPU 9.2-10.7 -> 8.2-10.4 s, wall
+                    # 3.2-3.8 -> 2.8-3.9 s. One task per maxPartitionBytes
+                    # alone made that 1 task and 6.3-8.1 s of wall.
+                    overwrite_table(data_sized(df), path, model.partition_by or None)
                     ctx[model.name] = read_back(df, path)
                 else:  # view
                     ctx[model.name] = df

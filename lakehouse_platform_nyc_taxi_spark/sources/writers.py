@@ -21,7 +21,7 @@ from __future__ import annotations
 from collections.abc import Sequence
 from urllib.parse import unquote
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -136,35 +136,58 @@ def incremental_delete_insert(
     path: str,
     unique_key: Sequence[str],
     partition_by: Sequence[str] = ("year", "month"),
-    delete_scope: str = "partition",
+    delete_scope: str | Column = "partition",
 ) -> list[tuple] | None:
     """S9: dbt ``incremental_strategy='delete+insert'`` on parquet.
 
-    First run -> plain CTAS. Subsequent runs: within the partitions the
-    batch touches, drop existing rows whose ``unique_key`` appears in the
-    batch (left-anti join), union the batch, and dynamically overwrite
-    only those partitions. Rows in untouched partitions are never read
-    or rewritten, so cost scales with the increment, not the table.
+    First run -> plain CTAS. Subsequent runs: within the delete scope,
+    drop existing rows whose ``unique_key`` appears in the batch (left-anti
+    join), union the batch, and dynamically overwrite only the partitions
+    that result holds. Rows outside the scope are never read or
+    rewritten, so cost scales with the increment, not the table.
+
+    The target is read with ``batch.schema``: no schema-inference job, and
+    a column the batch adds reads as NULL in the old rows, which is dbt's
+    ``on_schema_change='append_new_columns'``.
 
     Faithful quirk: the incoming batch is NOT deduplicated — delete+insert
     keeps within-batch duplicates (SURVEY.md §7.4).
 
-    Known divergence from dbt (``delete_scope="partition"``, the default):
-    dbt deletes by key across the WHOLE table, this deletes only within
-    the batch's ``(year, month)`` partitions — a re-delivered key whose
-    corrected timestamp moves it to a different month leaves the stale row
-    behind in the old partition. When cross-partition key moves are
-    possible, pass ``delete_scope="table"``: the full table is anti-joined
-    against the batch keys and rewritten (dbt-equivalent result, at
-    full-table-rewrite cost — the honest price of cross-partition DELETE
-    without a snapshotting table format).
+    ``delete_scope`` says which target rows the batch's keys are deleted
+    from:
+
+    - ``"partition"`` (the default): the ``partition_by`` partitions the
+      batch touches, collected in one 2-job ``distinct``. Known divergence
+      from dbt, which deletes by key across the WHOLE table: a
+      re-delivered key whose corrected timestamp moves it to a different
+      month leaves the stale row behind in the old partition.
+    - a Column: the rows of the partitions that predicate over the
+      ``partition_by`` columns selects. It must select every partition
+      the batch can touch; an incremental staging model passes its
+      watermark predicate (``models.staging.watermark_predicate``), which
+      selected the batch's raw rows. No collect runs. A selected partition
+      the batch has no row in is still anti-joined against the batch
+      keys, so a key re-delivered into a later month leaves it, which is
+      closer to dbt's table-wide delete than ``"partition"``. A selected
+      partition every row of which is deleted and that the batch adds
+      nothing to keeps its files: dynamic overwrite only replaces the
+      partitions it writes.
+    - ``"table"``: the full table is anti-joined against the batch keys
+      and rewritten (dbt-equivalent result, at full-table-rewrite cost —
+      the honest price of cross-partition DELETE without a snapshotting
+      table format).
 
     Returns the partition tuples it rewrote (values of ``partition_by``,
-    sorted NULL first), ``[]`` for an empty batch, or ``None`` when it
-    wrote the whole table: the first-run CTAS and ``delete_scope="table"``.
+    sorted NULL first) for ``"partition"``, ``[]`` for an empty batch
+    there, and ``None`` when it did not collect them: the first-run CTAS
+    and ``"table"`` write the whole table, a Column scope the partitions
+    its result holds.
     """
-    if delete_scope not in ("partition", "table"):
-        raise ValueError(f"delete_scope must be 'partition' or 'table', got {delete_scope!r}")
+    is_column = isinstance(delete_scope, Column)
+    if not is_column and delete_scope not in ("partition", "table"):
+        raise ValueError(
+            f"delete_scope must be 'partition', 'table' or a Column, got {delete_scope!r}"
+        )
     if not _path_exists(spark, path):
         # Same co-location discipline as the incremental branch below: key
         # the first-run CTAS on the partition columns so each output
@@ -178,10 +201,10 @@ def incremental_delete_insert(
             partition_by,
         )
         return None
-    existing = spark.read.parquet(path)
+    existing = spark.read.schema(batch.schema).parquet(path)
+    keys = batch.select(*unique_key)
 
-    if delete_scope == "table":
-        keys = batch.select(*unique_key)
+    if not is_column and delete_scope == "table":
         survivors = existing.join(keys, on=list(unique_key), how="left_anti")
         result = survivors.select(*batch.columns).unionByName(batch)
         # Materialize before overwriting the path being read (lineage to
@@ -192,25 +215,27 @@ def incremental_delete_insert(
         overwrite_table(result, path, partition_by)
         return None
 
-    # Restrict the rewrite to the batch's partitions. The distinct list
-    # of (year, month) pairs is tiny (one per ingested month) — a safe
-    # driver-side collect, mirroring the reference's scalar watermark.
-    parts = sorted(
-        (tuple(r) for r in batch.select(*partition_by).distinct().collect()),
-        key=nulls_first,
-    )
-    if not parts:
-        return parts
-    part_pred = F.lit(False)
-    for values in parts:
-        cond = F.lit(True)
-        for col, val in zip(partition_by, values):
-            cond = cond & (F.col(col) == F.lit(val))
-        part_pred = part_pred | cond
+    if is_column:
+        scope, parts = delete_scope, None
+    else:
+        # Restrict the rewrite to the batch's partitions. The distinct
+        # list of (year, month) pairs is tiny (one per ingested month) — a
+        # safe driver-side collect, mirroring the reference's scalar
+        # watermark.
+        parts = sorted(
+            (tuple(r) for r in batch.select(*partition_by).distinct().collect()),
+            key=nulls_first,
+        )
+        if not parts:
+            return parts
+        scope = F.lit(False)
+        for values in parts:
+            cond = F.lit(True)
+            for col, val in zip(partition_by, values):
+                cond = cond & (F.col(col) == F.lit(val))
+            scope = scope | cond
 
-    touched = existing.filter(part_pred)
-    keys = batch.select(*unique_key)
-    survivors = touched.join(keys, on=list(unique_key), how="left_anti")
+    survivors = existing.filter(scope).join(keys, on=list(unique_key), how="left_anti")
     # Align column order for the positional union.
     result = survivors.select(*batch.columns).unionByName(batch)
     # Co-locate each output partition into one task before the write:
@@ -259,6 +284,36 @@ def _dir_bytes(spark: SparkSession, path: str) -> int:
     return int(fs.getContentSummary(jpath).getLength())
 
 
+def file_count(total_bytes: int, target_bytes: int) -> int:
+    """``ceil(total_bytes / target_bytes)``, at least 1: how many files of
+    about ``target_bytes`` hold ``total_bytes``."""
+    return max(1, -(-total_bytes // target_bytes))
+
+
+def data_sized(df: DataFrame) -> DataFrame:
+    """``df`` coalesced to the partition count its size estimate needs, so
+    a write of it makes data-sized files instead of one per input split.
+
+    The rule follows Spark's file-scan split (``FilePartition.
+    maxSplitBytes``) over Spark's own settings, no knob of ours:
+    ``spark.sql.files.maxPartitionBytes`` per task, but the estimate is
+    spread over the default parallelism while each task keeps at least
+    ``maxPartitionBytes / parallelism`` (where Spark's floor is
+    ``openCostInBytes``, 4 MB). Small outputs are one task and one file,
+    since the per-task cost dominates there; larger ones use every core
+    before any task grows past ``maxPartitionBytes``. The estimate is the
+    optimized plan's ``sizeInBytes`` (planner statistics: no job);
+    ``coalesce`` merges input splits without a shuffle and never raises
+    the partition count.
+    """
+    spark = df.sparkSession
+    target = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    cores = spark.sparkContext.defaultParallelism
+    estimate = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    split = min(target, max(target // cores, estimate // cores))
+    return df.coalesce(file_count(estimate, split))
+
+
 def compact_table(
     spark: SparkSession,
     path: str,
@@ -278,8 +333,7 @@ def compact_table(
     output partition gets ~equal file counts and dynamic overwrite
     rewrites every partition in place.
     """
-    total = _dir_bytes(spark, path)
-    n_files = max(1, -(-total // (target_file_mb * 1024 * 1024)))
+    n_files = file_count(_dir_bytes(spark, path), target_file_mb * 1024 * 1024)
     df = spark.read.parquet(path)
     if partition_by:
         # shuffle on (partition cols, salt): co-locates each table

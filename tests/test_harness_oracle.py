@@ -5,6 +5,8 @@ the local mirror of the driver's correctness gate, at the driver's sf
 from __future__ import annotations
 
 import json
+import subprocess
+import sys
 
 import pytest
 
@@ -66,9 +68,13 @@ def _write_round(path, rnd, rows):
 
 
 def _registered():
-    """Registration order: the names in the order their modules ran."""
+    """The tie order: ``QUERY_MODULES`` order, then each module's
+    registration order."""
     harness.registry()  # imports the query modules
-    return list(harness._REGISTRY)
+    by_module = {m: [] for m in harness.QUERY_MODULES}
+    for name, spec in harness._REGISTRY.items():
+        by_module[spec.fn.__module__.rpartition(".")[2]].append(name)
+    return [name for names in by_module.values() for name in names]
 
 
 GREEN = {"rows_match": True, "err": None}
@@ -119,6 +125,29 @@ def test_registry_ties_keep_registration_order(history):
     names = list(harness.registry())
     assert names[-len(late):] == late
     assert names[: -len(late)] == [n for n in reg if n not in late]
+
+
+def test_registry_order_does_not_depend_on_import_order():
+    """A process that imports a query module before the package lists the
+    same order as one that imports the package alone."""
+    script = (
+        "import importlib, sys\n"
+        "for m in sys.argv[1:]: importlib.import_module(m)\n"
+        "from lakehouse_platform_nyc_taxi_spark import harness\n"
+        "print(' '.join(harness.registry()))\n"
+    )
+    pkg = "lakehouse_platform_nyc_taxi_spark.harness"
+
+    def names(*first):
+        out = subprocess.run(
+            [sys.executable, "-c", script, *first],
+            cwd=harness.HISTORY_DIR, capture_output=True, text=True, check=True,
+        )
+        return out.stdout.split()
+
+    package_first = names()
+    assert names(f"{pkg}.tpcds") == package_first
+    assert names(f"{pkg}.scale_corpus") == package_first
 
 
 def test_registry_yields_every_registered_name_once():

@@ -124,6 +124,49 @@ def test_incremental_delete_insert_returns_rewritten_partitions(spark, tmp_path)
     assert got == {("k1", 1), ("k2", 1), ("k3", 1), ("k4", 1), ("k5", 1), ("k6", 1), ("k7", 1)}
 
 
+def test_incremental_column_scope_deletes_keys_from_scope_partitions(spark, tmp_path):
+    """A Column scope anti-joins every partition it selects, also one the
+    batch has no row in: a key re-delivered into a later month leaves the
+    watermark partition, as with ``delete_scope="table"`` (dbt's
+    table-wide delete). The partition scope leaves that partition alone
+    and keeps the stale row. Nothing is collected, so nothing returns."""
+    first = _mk(spark, [("k1", 1, 2022, 12), ("k2", 1, 2023, 2), ("k3", 1, 2023, 2)])
+    batch = _mk(spark, [("k2", 9, 2023, 3), ("k4", 1, 2023, 3)])
+    watermark = (F.col("year") > 2023) | ((F.col("year") == 2023) & (F.col("month") >= 2))
+
+    def final(scope):
+        path = str(tmp_path / uuid.uuid4().hex)
+        incremental_delete_insert(spark, first, path, ["id"])
+        out = incremental_delete_insert(spark, batch, path, ["id"], delete_scope=scope)
+        return out, sorted((r.id, r.v, r.month) for r in spark.read.parquet(path).collect())
+
+    want = [("k1", 1, 12), ("k2", 9, 3), ("k3", 1, 2), ("k4", 1, 3)]
+    assert final(watermark) == (None, want)
+    assert final("table") == (None, want)
+    assert final("partition") == ([(2023, 3)], sorted(want + [("k2", 1, 2)]))
+
+
+def test_incremental_batch_adding_a_column_reads_null_in_old_rows(spark, tmp_path):
+    """The target is read with the batch's schema, so a column the batch
+    adds is NULL in the old rows (dbt ``append_new_columns``); reading the
+    target's own schema made the union fail on the missing column."""
+    wide = spark.createDataFrame(
+        [("k2", 9, "fix", 2023, 2), ("k3", 1, None, 2023, 2)],
+        "id string, v long, note string, year int, month int",
+    )
+    for scope in ("partition", F.col("month") >= 2):
+        path = str(tmp_path / uuid.uuid4().hex)
+        incremental_delete_insert(
+            spark, _mk(spark, [("k1", 1, 2023, 1), ("k2", 1, 2023, 2), ("k4", 1, 2023, 2)]),
+            path, ["id"],
+        )
+        incremental_delete_insert(spark, wide, path, ["id"], delete_scope=scope)
+        got = spark.read.option("mergeSchema", "true").parquet(path)
+        assert sorted((r.id, r.v, r.note) for r in got.collect()) == [
+            ("k1", 1, None), ("k2", 9, "fix"), ("k3", 1, None), ("k4", 1, None)
+        ]
+
+
 def test_overwrite_table(spark, tmp_path):
     path = str(tmp_path / "ctas")
     overwrite_table(_mk(spark, [("a", 1, 2023, 1)]), path)
