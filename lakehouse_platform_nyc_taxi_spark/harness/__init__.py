@@ -14,17 +14,16 @@ The driver value-checks only the first 50 names ``registry()`` yields
 and records each round in ``CORRECTNESS_r<N>.json`` at the repo root.
 ``registry()`` therefore orders names by their latest green round in
 those files, oldest first (a name never green counts as round 0), with
-ties in ``QUERY_MODULES`` order and registration order within a
-module. Checking in a round's file moves the queries it covered to the
-tail, so each round's window is the queries the driver has gone longest
-without checking. Every registered query is also value-checked on every
-change by ``tests/test_harness_oracle.py``.
+ties in registration order. Checking in a round's file moves the
+queries it covered to the tail, so each round's window is the queries
+the driver has gone longest without checking. Every registered query
+is also value-checked on every change by
+``tests/test_harness_oracle.py``.
 """
 
 from __future__ import annotations
 
 import dataclasses
-import importlib
 import json
 import os
 from collections.abc import Callable
@@ -145,41 +144,9 @@ def latest_green_round() -> dict[str, int]:
     return latest
 
 
-#: The query modules, in the order ``registry()`` imports them. It is
-#: the tie order too: a name ranks by its module's place here, then by
-#: its place in the module, so the order does not depend on which module
-#: a process imported first. ``core`` and ``mining`` lead because
-#: ``analytics`` imports them before it registers its own queries.
-QUERY_MODULES = (
-    "core",
-    "mining",
-    "analytics",
-    "llm",
-    "scale",
-    "scale_behavior",
-    "scale_calibration",
-    "scale_corpus",
-    "streaming",
-    "textops",
-    "tpcds",
-    "tpch",
-)
-
-
 def registry() -> dict[str, QuerySpec]:
-    # Import for side effects (registration) on first use.
-    for module in QUERY_MODULES:
-        importlib.import_module(f"{__name__}.{module}")
-
     latest = latest_green_round()
-    rank = {module: i for i, module in enumerate(QUERY_MODULES)}
-
-    def key(name: str) -> tuple[int, int]:
-        module = _REGISTRY[name].fn.__module__.rpartition(".")[2]
-        return latest.get(name, 0), rank[module]
-
-    # stable: a module's names keep their registration order
-    order = sorted(_REGISTRY, key=key)
+    order = sorted(_REGISTRY, key=lambda name: latest.get(name, 0))
     return {name: _REGISTRY[name] for name in order}
 
 
@@ -191,3 +158,22 @@ def oracle_sql() -> dict[str, str]:
     return {
         name: spec.oracle for name, spec in registry().items() if spec.oracle is not None
     }
+
+
+# Registration is a side effect of importing the query modules. Python
+# runs this package before any of its submodules, so importing them here
+# fixes the registration order whichever module a process imports first.
+from . import (  # noqa: E402, F401
+    analytics,
+    core,
+    llm,
+    mining,
+    scale,
+    scale_behavior,
+    scale_calibration,
+    scale_corpus,
+    streaming,
+    textops,
+    tpcds,
+    tpch,
+)

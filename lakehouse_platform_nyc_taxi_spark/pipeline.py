@@ -234,15 +234,8 @@ def run_pipeline(
                         )
                     ctx[model.name] = snap.read_table(spark, path)
                 elif model.materialized == "table":
-                    # Written in data-sized tasks, not one per input split:
-                    # fct_trips scans one file per staging partition (12 at
-                    # the benchmark's scale, 8 on the test fixture) and was
-                    # written as that many tiny files; it is now 1 file,
-                    # which each mart and the quality suite then scan as 1
-                    # task. At taxi n = 200k (933k fct_trips rows) it is 4
-                    # tasks instead of 12: CPU 9.2-10.7 -> 8.2-10.4 s, wall
-                    # 3.2-3.8 -> 2.8-3.9 s. One task per maxPartitionBytes
-                    # alone made that 1 task and 6.3-8.1 s of wall.
+                    # per-task cost dominates at small sizes, so the table
+                    # is written in data-sized tasks (see writers.data_sized)
                     overwrite_table(data_sized(df), path, model.partition_by or None)
                     ctx[model.name] = read_back(df, path)
                 else:  # view
